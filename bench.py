@@ -614,7 +614,7 @@ def bench_cdc_demux(
     max_load: float = 8.0, n_tables: int = 8, serial_leg: bool = True,
 ) -> dict:
     """Mixed N-table stream through the demux replay (one scan per batch,
-    per-table commit logs): throughput of the multi-table routing layer,
+    per-table exactly-once batch sets): throughput of the multi-table routing layer,
     digest-verified per table against each stream's own oracle.
 
     Two legs on identical inputs: the serial per-table loop and the

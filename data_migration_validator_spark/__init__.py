@@ -10,7 +10,8 @@ Modules
 - ``session``     SparkSession factory tuned for the sandbox (local[N]) and scale.
 - ``lake``        from-scratch lake-table format: manifest JSON + bucketed parquet,
                   copy-on-write MERGE, column-id schema evolution, snapshots,
-                  commit log (the Iceberg-shaped substrate; no external jars).
+                  per-snapshot applied-batch set (the Iceberg-shaped
+                  substrate; no external jars).
 - ``cdc``         deterministic change-event generator, last-writer-wins batch
                   applier with salted repartitioning, replay loop with
                   exactly-once batch commits and lineage metrics.

@@ -191,12 +191,13 @@ def _apply_schema_changes(table: LakeTable, actions: list[dict]) -> list[str]:
     """Apply ordered schema-change actions (JSON per FIXTURES.md §F2).
 
     IDEMPOTENT under crash-retry: schema evolution commits its own manifest
-    versions BEFORE the batch commit marker lands, so a crash between the
-    two redelivers the batch with the evolution already applied.  Each
-    action therefore checks the current schema first and no-ops when its
-    effect is already present (add: column exists; rename: source gone and
-    target present; widen: already the target type) — without this, the
-    retry raises on every redelivery and the stream wedges permanently.
+    versions BEFORE the MERGE commit that records the batch, so a crash
+    between the two redelivers the batch with the evolution already
+    applied.  Each action therefore checks the current schema first and
+    no-ops when its effect is already present (add: column exists; rename:
+    source gone and target present; widen: already the target type) —
+    without this, the retry raises on every redelivery and the stream
+    wedges permanently.
     """
     applied = []
     for a in actions:
@@ -440,7 +441,7 @@ def apply_batch(
 
         changes = _project_to_table(table, deduped, op_col="op")
 
-        # 4. MERGE (exactly-once marker written inside) — bucket stats are
+        # 4. MERGE (its manifest records the batch) — bucket stats are
         #    handed over, so the write is the batch's only other action.
         #    Exact-delete accounting (semi-join vs existing) is skipped on
         #    the hot path — the stats then carry only rows_delete_requested,

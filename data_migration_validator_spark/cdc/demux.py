@@ -9,9 +9,10 @@ the routing layer:
 - the mixed batch is persisted ONCE and sliced per table with a pushdown
   filter on the routing column, so T tables cost one scan + T cached
   filters, not T scans of the source;
-- **per-table exactly-once**: every destination LakeTable keeps its own
-  batch commit log, so a crash mid-loop (table A committed, table B not)
-  resumes correctly — the redelivered batch no-ops on A and applies on B;
+- **per-table exactly-once**: every destination LakeTable's manifest
+  records the batches it applied, so a crash mid-loop (table A committed,
+  table B not) resumes correctly — the redelivered batch no-ops on A and
+  applies on B;
 - rows whose routing value matches NO registered table are dead-lettered
   with reason ``unknown_table`` (same exactly-once (batch_id, event_seq)
   keyed upsert as :mod:`cdc.quarantine`) instead of vanishing;
@@ -28,11 +29,11 @@ its own exactly-once delta commit — at T small tables this removes T
 concurrent tiny write jobs' scheduler/codegen contention (measured 2.7x
 throughput at 8 tables).  Heterogeneous tables (or batches carrying
 schema events) fall back to the concurrent per-table fan-out (driver
-threads + per-table scheduler pools).  Per-table commit logs make either
+threads + per-table scheduler pools).  Per-table batch sets make either
 shape exactly-once, and the shared quarantine handle serializes its own
 writes.  With hundreds of tables, cap ``max_workers`` near the cluster's
 concurrent job headroom or run multiple demux jobs over disjoint table
-sets — the commit-log idempotence makes any split safe.
+sets — per-table exactly-once makes any split safe.
 """
 
 from __future__ import annotations
@@ -58,7 +59,7 @@ class DemuxBatchError(RuntimeError):
     errors (``failures``: {table_name: exception}) plus the stats of the
     tables that DID commit (``partial``) — not just whichever future
     happened to be inspected first.  Committed tables no-op on redelivery
-    (per-table commit logs), so the caller can retry the batch as-is."""
+    (per-table batch sets), so the caller can retry the batch as-is."""
 
     def __init__(self, failures: dict, partial: dict):
         names = ", ".join(sorted(failures))
@@ -105,7 +106,7 @@ def _gang_write(
     in a single dedup-exchange + ``partitionBy(table, bucket)`` write into
     a staging dir; each table then adopts its staged files via
     :meth:`LakeTable.commit_staged_deltas` (a rename + manifest commit,
-    no Spark work), keeping per-table exactly-once commit logs intact.
+    no Spark work), each manifest recording the batch for its table.
 
     This write is also the batch's MATERIALIZING action: the caller's
     shared discovery metrics (observe on ``events``) land here, so the
@@ -116,7 +117,8 @@ def _gang_write(
     Caller guarantees (checked via :func:`_gang_signature`): every pending
     table resolves to merge_mode="mor" and shares key/bucket event
     mapping, bucket count and current schema.  Crash mid-adoption
-    redelivers: committed tables no-op via their logs, the rest re-run.
+    redelivers: committed tables no-op via their manifests, the rest
+    re-run.
 
     Returns (stage_dir, gang_observed, files_by_table, ev_keys,
     num_buckets).  The caller owns stage-dir cleanup.
@@ -302,15 +304,15 @@ def demux_batch(
     """Apply one mixed micro-batch to every registered table.
 
     Returns {table_name: apply_batch stats, "__unknown__": n} — tables whose
-    commit log already holds ``batch_id`` report ``skipped``.
+    manifest already records ``batch_id`` report ``skipped``.
 
     ``max_workers > 1`` submits the per-table applies CONCURRENTLY from
     driver threads: with T tables the serial loop pays T sequential jobs'
     planning/commit latency per micro-batch while executors idle between
     small jobs — the round-3 review's one perf-weak finding.  Concurrency
     is safe by construction: each destination table owns its manifest and
-    commit log (per-table exactly-once — a crash mid-fan-out redelivers,
-    committed tables no-op), the shared quarantine handle serializes its
+    with it its applied-batch set (per-table exactly-once — a crash
+    mid-fan-out redelivers, committed tables no-op), the shared quarantine handle serializes its
     own writes (LakeTable._write_lock), and each task tags its jobs with a
     scheduler pool (``demux-<table>``) so a FAIR-scheduled cluster shares
     slots evenly; under default FIFO, later jobs still backfill free slots.

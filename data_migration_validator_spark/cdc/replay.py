@@ -5,7 +5,7 @@ Used by tests and the bench harness.  The streaming path
 replay loop is the deterministic, offset-explicit equivalent (the
 reference's unvalidated-COMPLETED-batch discovery loop,
 ``migration-data-validation.py:1792-1830``, without the manual SQL
-bookkeeping — our commit log IS the bookkeeping).
+bookkeeping — the manifest's applied-batch set IS the bookkeeping).
 """
 
 from __future__ import annotations
@@ -23,7 +23,8 @@ def pending_batches(table: LakeTable, events_dir: str) -> list[int]:
     """Unapplied batch ids, in order — the replay-native form of the
     reference's unvalidated-COMPLETED-batch discovery join
     (migration-data-validation.py:1792-1818): available batches minus the
-    commit log, no SQL bookkeeping tables."""
+    batches the table's manifest records as applied, no SQL bookkeeping
+    tables."""
     available = sorted(
         int(d.split("=")[1])
         for d in os.listdir(events_dir)
@@ -67,7 +68,7 @@ def replay(
     total_kept = total_rewritten = 0
     for bid in batch_ids:
         if table.has_batch(bid):
-            # commit-log skip BEFORE the read: a restart over an 800-batch
+            # applied-batch skip BEFORE the read: a restart over an 800-batch
             # stream should not pay per-batch listing + footer reads for
             # work it will immediately skip
             n_skipped += 1

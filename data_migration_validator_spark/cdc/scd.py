@@ -139,8 +139,10 @@ def scd2_apply(
 ) -> dict:
     """Apply one micro-batch of change events to the SCD2 history table.
 
-    Idempotent on ``batch_id`` (skips via the table's commit log before any
-    Spark work).  Returns {versions_opened, versions_closed, skipped}.
+    Idempotent on ``batch_id``: the batch is recorded in the manifest its
+    MERGE commits, and a batch the table's snapshot already records is
+    skipped before any Spark work.  Returns {versions_opened,
+    versions_closed, skipped}.
 
     ``merge_mode``: "cow" | "mor" | None (table property, default cow).
     "mor" is the sustained-ingest shape: closes ∪ opens land as O(batch)
@@ -241,13 +243,10 @@ def scd2_apply(
     n_keys = int(agg["n_keys"] or 0)
     n_opens = int(agg["n_opens"] or 0)
     if not touched:
-        # empty batch (e.g. pure schema events): just mark it applied
+        # empty batch (e.g. pure schema events): a data-less manifest
+        # commit records it applied — the demux path's empty-table commit
         if batch_id is not None:
-            table._record_batch(
-                batch_id,
-                int(table.manifest["seq"]),
-                {"versions_opened": 0},
-            )
+            table.commit_staged_deltas([], batch_id=batch_id)
         return {"versions_opened": 0, "versions_closed": 0, "skipped": False}
 
     # 3. close the table's current version for every touched key:

@@ -15,15 +15,13 @@ MIN/MAX are not incrementally maintainable under deletes/updates without
 re-scanning the group (the classic IVM distributive-vs-holistic split);
 callers needing them should recompute per refresh or bound the window.
 
-Exactly-once: the refresh window is write-ahead logged — the sidecar
-state file (`_ivm_state.json`) records the in-flight (since, until)
-window BEFORE the merge, and the view MERGE carries a batch id derived
-from the source table uuid and that window.  A crash anywhere replays
-deterministically: before the merge → same window recomputed; after the
-merge but before the state advance → same window, merge skipped by the
-batch marker.  The source advancing between crash and retry cannot
-change the window (it is pinned by the WAL), and ``refresh()`` folds any
-remainder in follow-up windows until the view reaches the head.
+Exactly-once: the view's definition (source uuid, group and sum columns)
+and the source seq it is refreshed to live in the view table's own
+manifest (``view``), and each window commits its refreshed seq in the SAME
+manifest as its MERGE (or rebuild overwrite).  A crash before that commit
+leaves the old seq, so the retry recomputes from the same ``since`` up to
+the then-current source head — nothing landed, nothing double-applies; a
+crash after it finds the window done.
 
 Correctness invariant (tested): after any refresh,
 ``view.read() == source.read().groupBy(G).agg(count, sums)`` exactly.
@@ -35,16 +33,12 @@ recomputes its summary tables per run.  Engine-native surface
 
 from __future__ import annotations
 
-import json
-import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .table import LakeTable
-
-_STATE_FILE = "_ivm_state.json"
 
 
 class IncrementalAggView:
@@ -113,90 +107,52 @@ class IncrementalAggView:
             key_cols=list(group_cols),
             num_buckets=num_buckets,
         )
-        v = IncrementalAggView(spark, root, source, group_cols, sum_cols, table)
-        v._write_state(0)
-        return v
+        table._write_manifest(
+            table._next_manifest(
+                view={
+                    "source_uuid": source.manifest["table_uuid"],
+                    "group_cols": list(group_cols),
+                    "sum_cols": list(sum_cols),
+                    "refreshed_seq": 0,
+                }
+            )
+        )
+        return IncrementalAggView(spark, root, source, group_cols, sum_cols, table)
 
     @staticmethod
     def load(
         spark: SparkSession, root: str, source: LakeTable
     ) -> "IncrementalAggView":
         table = LakeTable.load(spark, root)
-        with open(os.path.join(root, _STATE_FILE)) as f:
-            st = json.load(f)
+        st = table.manifest.get("view")
+        if st is None:
+            raise ValueError(f"no view definition in the manifest at {root}")
         if st["source_uuid"] != source.manifest["table_uuid"]:
             raise ValueError(
                 "view was built over a different source table "
                 f"({st['source_uuid']} != {source.manifest['table_uuid']})"
             )
-        # the defining columns are persisted in the sidecar (a name-prefix
-        # reconstruction would misclassify a group column named 'sum_*');
-        # the prefix fallback only serves pre-upgrade state files.
-        group_cols = st.get("group_cols", table.key_cols)
-        sum_cols = st.get(
-            "sum_cols",
-            [
-                f.name[len("sum_"):]
-                for f in table.schema.fields
-                if f.name.startswith("sum_")
-            ],
+        return IncrementalAggView(
+            spark, root, source, st["group_cols"], st["sum_cols"], table
         )
-        return IncrementalAggView(spark, root, source, group_cols, sum_cols, table)
-
-    def _write_state(self, last_seq: int, pending: dict | None = None) -> None:
-        st = {
-            "source_uuid": self.source.manifest["table_uuid"],
-            "last_refreshed_seq": int(last_seq),
-            "group_cols": self.group_cols,
-            "sum_cols": self.sum_cols,
-        }
-        if pending is not None:
-            st["pending"] = {
-                "since": int(pending["since"]),
-                "until": int(pending["until"]),
-            }
-        tmp = os.path.join(self.root, _STATE_FILE + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-        os.replace(tmp, os.path.join(self.root, _STATE_FILE))
-
-    def _read_state(self) -> dict:
-        with open(os.path.join(self.root, _STATE_FILE)) as f:
-            return json.load(f)
 
     @property
     def last_refreshed_seq(self) -> int:
-        return int(self._read_state()["last_refreshed_seq"])
+        return int(self.table.manifest["view"]["refreshed_seq"])
+
+    def _advancing_to(self, seq: int):
+        """Commit context: the view manifest committed inside it records
+        the source as refreshed up to ``seq``."""
+        return self.table._committing(
+            view={**self.table.manifest["view"], "refreshed_seq": int(seq)}
+        )
 
     # ------------------------------------------------------------------ #
     # maintenance
     # ------------------------------------------------------------------ #
     def refresh(self) -> dict:
-        """Fold the change feed since the last refresh into the view,
-        window by window, until the view reaches the source head.
-
-        A crash-recovered refresh first completes the write-ahead-logged
-        pending window (pinned before its merge, so the batch id is stable
-        across retries even if the source advanced in between), then folds
-        the remainder; a fresh refresh is a single head window.
-        """
-        out = self._refresh_window()
-        if out.get("skipped") or out.get("rebuilt"):
-            return out
-        windows = 1
-        while self.last_refreshed_seq < int(self.source.manifest["seq"]):
-            nxt = self._refresh_window()
-            if nxt.get("skipped"):
-                break
-            windows += 1
-            if nxt.get("rebuilt"):
-                return {**nxt, "windows": windows}
-            out = nxt
-        out["windows"] = windows
-        return out
-
-    def _refresh_window(self) -> dict:
-        """One maintenance window: O(changed rows + touched groups).
+        """Fold the change feed since the last refresh into the view, up to
+        the source head, as one window: O(changed rows + touched groups).
 
         Plan: one change-feed diff (the source's single full-outer join),
         one hash aggregate down to the touched groups (map-side partial —
@@ -206,21 +162,10 @@ class IncrementalAggView:
         snapshot diff, and callers running inside the ingest loop can pass
         consecutive seqs so the diff stays O(batch).
         """
-        st = self._read_state()
-        since = int(st["last_refreshed_seq"])
-        pending = st.get("pending")
-        if pending is not None and int(pending["since"]) == since:
-            # crash recovery: replay the exact logged window (its merge
-            # batch marker makes an already-applied merge a no-op).
-            until = int(pending["until"])
-        else:
-            until = int(self.source.manifest["seq"])
-            if since == until:
-                return {"skipped": True, "reason": "up to date", "seq": until}
-            # write-ahead log the window BEFORE any work: the retry after a
-            # crash between the merge and the state advance must see the
-            # identical (since, until) or it would double-apply the delta.
-            self._write_state(since, pending={"since": since, "until": until})
+        since = self.last_refreshed_seq
+        until = int(self.source.manifest["seq"])
+        if since == until:
+            return {"skipped": True, "reason": "up to date", "seq": until}
         # seq 0 = view creation time; the source's first real snapshot is 1
         try:
             feed = self.source.changes(max(since, 1), until, with_preimage=True)
@@ -228,8 +173,7 @@ class IncrementalAggView:
             # the since-snapshot fell out of the source's retention window
             # (expire_snapshots) — the delta is unrecoverable, so rebuild
             # from the defining query: one full aggregate, one overwrite.
-            # The rebuild reads the source HEAD, so state advances to it.
-            return self._rebuild(int(self.source.manifest["seq"]))
+            return self._rebuild(until)
         sign = F.when(
             F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
         ).otherwise(F.lit(-1))
@@ -290,20 +234,15 @@ class IncrementalAggView:
             [F.col(g).isNull() for g in self.group_cols],
         )
         pre_seq = int(self.table.manifest["seq"])
-        stats = self.table.merge(
-            changes,
-            op_col="__ivm_op",
-            delete_value="delete",
-            batch_id=(
-                "ivm",
-                self.source.manifest["table_uuid"],
-                int(since),
-                int(until),
-            ),
-            count_deletes=False,
-            mode="mor",
-            extra_obs={"null_groups": F.sum(null_groups.cast("long"))},
-        )
+        with self._advancing_to(until):
+            stats = self.table.merge(
+                changes,
+                op_col="__ivm_op",
+                delete_value="delete",
+                count_deletes=False,
+                mode="mor",
+                extra_obs={"null_groups": F.sum(null_groups.cast("long"))},
+            )
         n_null = int(
             (stats.get("observed_extras") or {}).get("null_groups") or 0
         )
@@ -319,7 +258,6 @@ class IncrementalAggView:
         # — compacting near-every refresh would just restore the second
         # Spark action this path exists to avoid
         self.table.maybe_compact(max_delta_ratio=4.0)
-        self._write_state(until)
         return {
             "since_seq": since,
             "until_seq": until,
@@ -338,9 +276,9 @@ class IncrementalAggView:
     def _rebuild(self, until: int) -> dict:
         """Full rebuild from the defining query (used when the incremental
         window expired).  Overwrite replaces every group — including ones
-        that should vanish — then the state advances."""
-        self.table.overwrite(self.recompute())
-        self._write_state(until)
+        that should vanish — and commits the refreshed seq with it."""
+        with self._advancing_to(until):
+            self.table.overwrite(self.recompute())
         return {"skipped": False, "rebuilt": True, "until_seq": until}
 
     # ------------------------------------------------------------------ #

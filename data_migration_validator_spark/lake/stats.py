@@ -47,7 +47,10 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import sys
 from decimal import Decimal, InvalidOperation
+
+from pyspark import cloudpickle
 
 _STR_BOUND_MAX = 4000  # treat longer string bounds as open (truncation guard)
 _STR_STORE_MAX = 64  # stored string bounds are truncated to this many chars
@@ -237,7 +240,10 @@ def collect_entry_stats(
     The footers are opened by ONE small executor-side job over the file
     list (Iceberg collects the same stats in the writer task): the driver
     does no per-file I/O, so commit latency stays flat as a commit's file
-    count grows, and the collected rows shipped back are bytes per file."""
+    count grows, and the collected rows shipped back are bytes per file.
+    The job's functions are pickled BY VALUE (this module is registered
+    with cloudpickle below), so the executors need only pyarrow — not
+    this package on their import path."""
     import os
 
     want: dict[str, tuple[int, str]] = {}
@@ -264,6 +270,11 @@ def collect_entry_stats(
         st = by_rel.get(e["path"])
         if st:
             e["stats"] = st
+
+
+# the footer job ships _file_stats and its helpers to Python workers that
+# may not have this package importable: send the code, not a module ref
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 # --------------------------------------------------------------------- #

@@ -20,9 +20,12 @@ needed subset itself, Spark-first:
   shuffles; file pruning keeps the scan to touched buckets only.  Mirrors the
   reference's MERGE sink (``conf/setup_validation_mapping.py:8-67``)
   generalized to arbitrary key upsert+delete.
-- **Exactly-once commit log** (``_commits/<batch_id>.json``): the idempotent
-  batch-id sink of the north rule, generalizing the reference's "skip
-  already-SUMMARY_SUCCESS batches" (migration-data-validation.py:1816-1817).
+- **Exactly-once batch set** (``batches`` in every manifest): each
+  snapshot records the batch ids applied up to it, so the manifest link is
+  the ONE commit point for data and exactly-once state alike (Delta's
+  ``txn`` action, an Iceberg snapshot summary) — generalizing the
+  reference's "skip already-SUMMARY_SUCCESS batches"
+  (migration-data-validation.py:1816-1817).
 - **Schema evolution**: add / rename / widen produce a new schema id; old
   files stay live and are projected to the current schema at read time by
   field id (rename-safe) with casts (widen) and null fill (add).
@@ -46,6 +49,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .schema import TableSchema
 from .stats import collect_entry_stats, prune_entries
 
@@ -64,9 +68,9 @@ class ConcurrentCommitError(RuntimeError):
     referenced by any manifest — invisible to readers, reclaimed by
     :meth:`LakeTable.expire_snapshots`), and the loser's handle is left on
     its ORIGINAL snapshot, so the recovery is always: ``load()`` a fresh
-    handle and re-apply.  For idempotent CDC batches the replay loop does
-    exactly that for free (the batch marker is only recorded after a
-    manifest wins, so the retry re-applies the batch)."""
+    handle and re-apply.  For CDC batches the replay loop does exactly that
+    for free: a batch counts as applied only in the manifest that won, so
+    the fresh handle re-applies it unless the winner already did."""
 
 
 _TS_PIN_KEY = "spark.sql.parquet.outputTimestampType"
@@ -152,6 +156,19 @@ def _anti_join_strategy(
     return "shuffle"
 
 
+def _fs(op, *args):
+    """The commit protocol's one filesystem seam: every mutation a commit
+    or a vacuum makes (manifest temp write, manifest ``os.link``, staged
+    delta rename, expiry removals) is ``_fs(op, *args)``, so a crash test
+    can kill the protocol at each call in turn."""
+    return op(*args)
+
+
+def _dump_json(path: str, obj: dict) -> None:
+    with open(path, "w") as f:
+        json.dump(obj, f, indent=1)
+
+
 def _seed_bucket_rows(m: dict) -> dict[str, int]:
     """A manifest's per-bucket row counts, seeding LEGACY manifests (written
     before bucket_rows existed) from their per-file counts — the ONE copy of
@@ -184,6 +201,7 @@ class LakeTable:
         # consecutive zero-yield MERGE prune probes on this handle (the
         # adaptive probe hysteresis; re-armed by compact()/rebucket())
         self._probe_miss_streak = 0
+        self._carry: dict = {}  # see _committing
         # single-writer guard PER HANDLE: concurrent driver threads (the
         # parallel demux fan-out) may share one destination handle — e.g.
         # the quarantine table — and its manifest commit is a
@@ -212,7 +230,6 @@ class LakeTable:
                 raise ValueError(f"key column {k!r} not in schema")
         bucket_col = bucket_col or key_cols[0]
         os.makedirs(os.path.join(root, "_manifest"), exist_ok=True)
-        os.makedirs(os.path.join(root, "_commits"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         manifest = {
             "format_version": 1,
@@ -225,6 +242,7 @@ class LakeTable:
             "key_cols": list(key_cols),
             "files": [],
             "bucket_rows": {},
+            "batches": {},
             "properties": properties or {},
             "committed_at": time.time(),
         }
@@ -280,10 +298,10 @@ class LakeTable:
         rewriting a byte, and the rolled-over commits stay time-travelable
         until :meth:`expire_snapshots`.
 
-        Exactly-once interplay: batch commit markers recorded AFTER the
-        target snapshot are retracted, so replaying the event stream
-        re-applies exactly the undone batches and the table reconverges —
-        without this, the idempotent sink would skip them forever.
+        Exactly-once interplay: the restored snapshot brings back its own
+        batch set, so the batches applied after ``seq`` (reported as
+        ``batches_retracted``) re-apply when the event stream is replayed
+        and the table reconverges.
         """
         self._assert_writable()
         self._probe_miss_streak = 0  # file geometry changes: re-arm probe
@@ -294,25 +312,22 @@ class LakeTable:
             )
         with open(path) as f:
             old = json.load(f)
+        restored = {
+            k: v for k, v in old.items()
+            if k not in ("seq", "parent_seq", "committed_at", "properties")
+        }
         # legacy target manifest: seeds from per-file counts, else the
         # restored table would report row_count() == 0 ({} is "present")
-        brows = _seed_bucket_rows(old)
-        m = self._next_manifest(
-            files=old["files"],
+        restored.update(
             deltas=old.get("deltas", []),
-            bucket_rows=brows,
-            schema_id=old["schema_id"],
-            schemas=old["schemas"],
-            partition=old["partition"],
-            key_cols=old["key_cols"],
+            batches=old.get("batches", {}),
+            bucket_rows=_seed_bucket_rows(old),
         )
-        retracted = []
-        for p in glob.glob(os.path.join(self.root, "_commits", "batch-*.json")):
-            with open(p) as f:
-                marker = json.load(f)
-            if int(marker.get("seq", 0)) > seq:
-                retracted.append(marker["batch_id"])
-                os.remove(p)
+        m = self._next_manifest(**restored)
+        retracted = [
+            b["id"] for k, b in self.manifest.get("batches", {}).items()
+            if k not in m["batches"]
+        ]
         self._write_manifest(m)
         return {
             "rolled_back_to": seq,
@@ -370,16 +385,17 @@ class LakeTable:
         gets :class:`ConcurrentCommitError` — no
         check-then-replace window in which a commit could be silently
         clobbered.  On an object store this maps to a conditional PUT
-        (If-None-Match) or a commit-coordinator swap."""
+        (If-None-Match) or a commit-coordinator swap.  The link is the
+        table's only commit point: a snapshot's files, schema and applied
+        batch set become visible together or not at all."""
         self._assert_writable()
         seq = manifest["seq"]
         mdir = os.path.join(self.root, "_manifest")
         tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex}.json")
         final = os.path.join(mdir, f"v{seq:08d}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
+        _fs(_dump_json, tmp, manifest)
         try:
-            os.link(tmp, final)  # atomic claim: EEXIST = lost the race
+            _fs(os.link, tmp, final)  # atomic claim: EEXIST = lost the race
         except FileExistsError:
             raise ConcurrentCommitError(
                 f"seq {seq} was committed by another writer while this "
@@ -393,12 +409,31 @@ class LakeTable:
                 pass
         self.manifest = manifest
 
-    def _next_manifest(self, **updates) -> dict:
+    @contextmanager
+    def _committing(self, **updates):
+        """Fold ``updates`` into every manifest this handle commits inside
+        the block: how an owner's own state (a view's definition and
+        refreshed source seq) lands atomically with a MERGE or overwrite,
+        and is rolled back with the snapshot that carries it."""
+        self._carry = updates
+        try:
+            yield
+        finally:
+            self._carry = {}
+
+    def _next_manifest(self, batch_id=None, **updates) -> dict:
+        """The next snapshot: this handle's manifest with ``updates``
+        applied, recording ``batch_id`` (when given) as applied in it."""
         m = json.loads(json.dumps(self.manifest))
         m["parent_seq"] = m["seq"]
         m["seq"] += 1
         m["committed_at"] = time.time()
+        m.update(self._carry)
         m.update(updates)
+        if batch_id is not None:
+            m.setdefault("batches", {})[str(batch_id)] = {
+                "id": batch_id, "seq": m["seq"],
+            }
         return m
 
     # ------------------------------------------------------------------ #
@@ -571,7 +606,7 @@ class LakeTable:
             # type — see stats.prune_entries soundness notes
             files = prune_entries(self.spark, stats_predicate, cur, files)
         if not files:
-            return self.spark.createDataFrame([], cur.to_struct_type())
+            return local_frame(self.spark, [], cur.to_struct_type())
 
         by_schema: dict[str, list[str]] = {}
         for f in files:
@@ -912,16 +947,9 @@ class LakeTable:
     # MERGE (upsert + delete), exactly-once by batch_id
     # ------------------------------------------------------------------ #
     def has_batch(self, batch_id) -> bool:
-        return os.path.exists(
-            os.path.join(self.root, "_commits", f"batch-{batch_id}.json")
-        )
-
-    def _record_batch(self, batch_id, seq: int, stats: dict) -> None:
-        p = os.path.join(self.root, "_commits", f"batch-{batch_id}.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "seq": seq, **stats}, f)
-        os.replace(tmp, p)
+        """Whether this handle's snapshot records ``batch_id`` as applied
+        (batches another handle committed show up after :meth:`load`)."""
+        return str(batch_id) in self.manifest.get("batches", {})
 
     # key types the MERGE file-prune probe supports: same-type range
     # comparisons with no coercion traps (char padding, session-tz
@@ -1091,9 +1119,10 @@ class LakeTable:
                 return None
         else:
             kt = "string" if _base_type(fld.type) == "varchar" else fld.type
-            files_df = self.spark.createDataFrame(
+            files_df = local_frame(
+                self.spark,
                 probe_rows,
-                schema=f"__path string, __fb int, __lo {kt}, __hi {kt}, __open boolean",
+                f"__path string, __fb int, __lo {kt}, __hi {kt}, __open boolean",
             )
             hits = (
                 changes.select(F.col(key).alias("__k"), F.col("__bucket"))
@@ -1341,9 +1370,8 @@ class LakeTable:
                 if e["bucket"] not in touched_set
             ],
             bucket_rows=self._updated_bucket_rows(touched_set, bucket_rows),
+            batch_id=batch_id,
         )
-        if batch_id is not None:
-            m["properties"]["last_batch_id"] = str(batch_id)
         self._write_manifest(m)
 
         stats = {
@@ -1357,8 +1385,6 @@ class LakeTable:
         }
         if count_deletes:
             stats["rows_deleted"] = rows_deleted
-        if batch_id is not None:
-            self._record_batch(batch_id, m["seq"], stats)
         return stats
 
     def _merge_mor(
@@ -1399,9 +1425,8 @@ class LakeTable:
 
         m = self._next_manifest(
             deltas=self.manifest.get("deltas", []) + entries,
+            batch_id=batch_id,
         )
-        if batch_id is not None:
-            m["properties"]["last_batch_id"] = str(batch_id)
         self._write_manifest(m)
 
         stats = {
@@ -1416,8 +1441,6 @@ class LakeTable:
         }
         if count_deletes:
             stats["rows_deleted"] = rows_deleted
-        if batch_id is not None:
-            self._record_batch(batch_id, m["seq"], stats)
         return stats
 
     def commit_staged_deltas(
@@ -1436,9 +1459,10 @@ class LakeTable:
         schema columns plus ``__op`` ('u'/'d'), and the change-set was
         pre-deduped per key within the batch.
 
-        ``files``: [(staged_path, bucket)].  Exactly-once on ``batch_id``
-        via the commit log; an empty list still records the batch (a table
-        with no rows in this mixed batch must not re-apply on redelivery).
+        ``files``: [(staged_path, bucket)].  Exactly-once on ``batch_id``:
+        the manifest this call links records the batch; an empty list still
+        commits one (a table with no rows in this mixed batch must not
+        re-apply on redelivery).  No Spark job runs here.
         """
         import shutil
 
@@ -1456,9 +1480,9 @@ class LakeTable:
                 os.makedirs(dst_dir, exist_ok=True)
                 dst = os.path.join(dst_dir, os.path.basename(src))
                 try:
-                    os.rename(src, dst)
+                    _fs(os.rename, src, dst)
                 except OSError:  # cross-device staging dir: copy fallback
-                    shutil.move(src, dst)
+                    _fs(shutil.move, src, dst)
                 entries.append(
                     {
                         "path": os.path.relpath(dst, self.root),
@@ -1470,11 +1494,10 @@ class LakeTable:
                 )
             m = self._next_manifest(
                 deltas=self.manifest.get("deltas", []) + entries,
+                batch_id=batch_id,
             )
-            if batch_id is not None:
-                m["properties"]["last_batch_id"] = str(batch_id)
             self._write_manifest(m)
-            out = {
+            return {
                 "skipped": False,
                 "mode": "mor",
                 "gang": True,
@@ -1482,9 +1505,6 @@ class LakeTable:
                 "touched_buckets": sorted({int(b) for _, b in files}),
                 **(stats or {}),
             }
-            if batch_id is not None:
-                self._record_batch(batch_id, m["seq"], out)
-            return out
 
     # ------------------------------------------------------------------ #
     # compaction (MOR maintenance: fold deltas back into the base)
@@ -1831,6 +1851,11 @@ class LakeTable:
                 m = json.load(f)
             for entry in m["files"] + m.get("deltas", []):
                 superseded.add(entry["path"])
+        # expired manifests go FIRST: a crash part-way through leaves at
+        # worst unreferenced data files, which the next run sweeps up —
+        # never a manifest pointing at deleted files
+        for mp in expired:
+            _fs(os.remove, mp)
         data_root = os.path.join(self.root, "data")
         files_removed = 0
         bytes_reclaimed = 0
@@ -1849,17 +1874,15 @@ class LakeTable:
                 ):
                     continue
                 bytes_reclaimed += os.path.getsize(p)
-                os.remove(p)
+                _fs(os.remove, p)
                 files_removed += 1
         # drop now-empty snapshot directories (bottom-up)
         for d, subdirs, fnames in os.walk(data_root, topdown=False):
             if d != data_root and not subdirs and not fnames:
                 try:
-                    os.rmdir(d)
+                    _fs(os.rmdir, d)
                 except OSError:
                     pass
-        for mp in expired:
-            os.remove(mp)
         return {
             "manifests_removed": len(expired),
             "files_removed": files_removed,

@@ -1,8 +1,9 @@
 """SparkSession factory.
 
-Defaults follow the sandbox contract (local[$SPARK_GRAFT_CPUS], 32 shuffle
-partitions) but every knob is overridable; on a real cluster the same code
-runs under ``spark-submit --py-files`` with the master supplied externally.
+Defaults follow the sandbox contract (local[$SPARK_GRAFT_CPUS], else one
+task slot per core this process may run on) but every knob is
+overridable; on a real cluster the same code runs under
+``spark-submit --py-files`` with the master supplied externally.
 
 AQE is always on: runtime coalescing + skew-join splitting are part of the
 engine's skew story alongside the explicit salting in ``cdc.apply``
@@ -13,7 +14,37 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def default_cores() -> int:
+    """$SPARK_GRAFT_CPUS, else the cores this process may run on (what
+    ``nproc`` reports) — never a fixed count that oversubscribes a small
+    host."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """A small driver-side frame through the Arrow path: the rows become
+    one in-memory Arrow table, so the plan is a local relation and no
+    Python worker runs (``createDataFrame`` of a list goes through
+    ``parallelize`` and a Python-worker map)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = (
+        schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    )
+    names = struct.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def get_spark(
@@ -25,9 +56,9 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``cores`` pins ``local[cores]`` — used by the bench harness to evidence
-    N-vs-4N scaling.  When None, respects $SPARK_GRAFT_CPUS (default 32).
+    N-vs-4N scaling.  When None, :func:`default_cores`.
     """
-    n = cores if cores is not None else int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n = cores if cores is not None else default_cores()
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{n}]")
     sp = shuffle_partitions if shuffle_partitions is not None else max(n, 8)
 

@@ -9,8 +9,8 @@ is the native-streaming re-expression:
 - ``foreachBatch(fn, batchId)`` replaces the ``_aud_batch_load_id IN (...)``
   row scoping (``databricks-extract.py:172-178``);
 - exactly-once: foreachBatch is at-least-once on retry, so the sink is made
-  idempotent — ``apply_batch`` consults the lake table's batch commit log and
-  no-ops on a replayed batchId (SURVEY.md §7.4 known-hard part 1).
+  idempotent — ``apply_batch`` consults the applied-batch set in the lake table's
+  manifest and no-ops on a replayed batchId (SURVEY.md §7.4 known-hard part 1).
 """
 
 from __future__ import annotations
@@ -77,7 +77,7 @@ def start_stream(
 
     ``ordering_gate=True`` interposes the stateful per-key monotonic
     event_seq gate (:func:`..streaming.windowed.stateful_ordering_gate`)
-    between source and sink: the batch commit log already absorbs
+    between source and sink: the manifest's applied-batch set already absorbs
     whole-batch redelivery; the gate additionally drops ROW-level
     duplicates a tailing source can re-emit under new file names (e.g. a
     re-uploaded binlog segment).  Costs the gate's state shuffle per batch;
@@ -222,7 +222,7 @@ def run_scd2_stream_once(
     in listing order, the same contract batch replay relies on (the fixture
     writes ``batch_hint=N`` directories in sequence); a source that can
     reorder needs the stateful ordering gate upstream.  Safe to re-run with
-    the same checkpoint: replayed batchIds no-op via the commit log.
+    the same checkpoint: replayed batchIds no-op via the manifest's batch set.
 
     ``merge_mode="mor"`` (forwarded via ``scd_kwargs``) makes each batch an
     O(batch) delta commit; ``compact_ratio`` then bounds the delta pile the
@@ -267,7 +267,7 @@ def start_demux_stream(
 ) -> None:
     """Multi-table tail: one mixed stream (schema = event stream + the
     routing column) demuxed to per-table lake tables inside foreachBatch
-    (:func:`cdc.demux.demux_batch`).  Per-table commit logs make the sink
+    (:func:`cdc.demux.demux_batch`).  Per-table batch sets make the sink
     idempotent table-by-table — a micro-batch redelivered after a crash
     mid-demux no-ops on the tables that committed and applies on the rest.
     One availableNow pass; resumes from the checkpoint like

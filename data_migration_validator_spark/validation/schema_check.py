@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lake.schema import _WIDEN, _base
+from ..session import local_frame
 
 
 def schema_store(
@@ -31,7 +32,8 @@ def schema_store(
         )
         for i, f in enumerate(schema.fields)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "col_name string, data_type string, col_order int, side string, "
         "comment string",
@@ -126,8 +128,8 @@ def default_compatibility_matrix(spark: SparkSession) -> DataFrame:
         allowed = sorted({frm} | tos)
         pattern = "^(" + "|".join(allowed) + ")([(].*)?$"
         rows.append((f"^{frm}([(].*)?$", pattern))
-    return spark.createDataFrame(
-        rows, "src_type_pattern string, compatible_tgt_pattern string"
+    return local_frame(
+        spark, rows, "src_type_pattern string, compatible_tgt_pattern string"
     )
 
 
@@ -203,7 +205,7 @@ def can_widen_df(spark: SparkSession) -> DataFrame:
     """The lattice as explicit (frm, to) pairs — handy for SQL tests."""
     rows = [(f, t) for f, tos in _WIDEN.items() for t in sorted(tos)]
     rows += [(f, f) for f in _WIDEN]
-    return spark.createDataFrame(rows, "frm string, wide string")
+    return local_frame(spark, rows, "frm string, wide string")
 
 
 __all__ = [

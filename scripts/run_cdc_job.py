@@ -10,8 +10,8 @@
         [--quarantine-root /lake/_dlq/repo_content] \
         [--demux-tables ta,tb --table-col table_name]
 
-Batch mode replays all pending batches through the exactly-once commit log
-(the reference's unvalidated-COMPLETED-batch loop,
+Batch mode replays every batch the table's manifest does not yet record as
+applied (exactly-once; the reference's unvalidated-COMPLETED-batch loop,
 migration-data-validation.py:1792-1830); stream mode runs one availableNow
 Structured Streaming pass and resumes from the checkpoint.  Either mode is
 safe to re-run after a crash — redelivered batches no-op.
@@ -111,10 +111,9 @@ def main() -> None:
         # validate against an existing view's stored definition BEFORE any
         # replay runs — rejecting after batches were applied would leave a
         # "failed" run that silently advanced the table
-        state_path = os.path.join(args.view_root, "_ivm_state.json")
-        if os.path.exists(state_path):
-            with open(state_path) as fh:
-                st = json.load(fh)
+        if LakeTable.exists(args.view_root):
+            # the definition lives in the view's manifest: no session needed
+            st = LakeTable.load(None, args.view_root).manifest.get("view", {})
             want_group = [c.strip() for c in args.view_group.split(",") if c.strip()]
             want_sums = [
                 c.strip() for c in (args.view_sums or "").split(",") if c.strip()
@@ -208,7 +207,7 @@ def main() -> None:
 
         group = [c.strip() for c in args.view_group.split(",") if c.strip()]
         sums = [c.strip() for c in (args.view_sums or "").split(",") if c.strip()]
-        if os.path.exists(os.path.join(args.view_root, "_ivm_state.json")):
+        if LakeTable.exists(args.view_root):
             # definition mismatch was already rejected up front, pre-replay
             view = IncrementalAggView.load(spark, args.view_root, table)
         else:
@@ -221,7 +220,8 @@ def main() -> None:
 
 def _run_demux(spark, args) -> None:
     """Multi-table mode: the events dir carries a mixed stream; each named
-    table gets its own lake root, lineage table, and commit log."""
+    table gets its own lake root and lineage table, and records applied
+    batches in its own manifest."""
     from data_migration_validator_spark.cdc.demux import demux_replay
     from data_migration_validator_spark.streaming.stream import start_demux_stream
 

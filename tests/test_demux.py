@@ -118,19 +118,23 @@ def test_demux_unknown_table_dead_letters(spark, tmp_root):
     _assert_equal(expected_final_state(b), tables["tbl_b"])
 
 
-def test_demux_partial_crash_resume(spark, tmp_root):
-    """Crash mid-loop: table A committed batch 0, table B did not.  The
-    redelivered batch must no-op on A and apply on B."""
+def test_demux_partial_crash_resume(spark, tmp_root, kill_seam):
+    """Crash mid-loop: table A committed batch 0, table B died at its
+    manifest link.  The redelivered batch must no-op on A and apply on B."""
+    from conftest import Crash, link_into
+
     a, b, mixed = _mixed_stream(spark, n_a=900, n_b=700, batch=1_000)
     tables = {
         "tbl_a": _table(spark, tmp_root, "tbl_a"),
         "tbl_b": _table(spark, tmp_root, "tbl_b"),
     }
     mixed = mixed.cache()
-    out1 = demux_batch(tables, mixed, batch_id=0)
-    assert not out1["tbl_a"].get("skipped") and not out1["tbl_b"].get("skipped")
-    # simulate: B's commit marker lost (crash before its commit)
-    os.remove(os.path.join(tables["tbl_b"].root, "_commits", "batch-0.json"))
+    kill_seam.arm(kill_at=1, match=link_into(tables["tbl_b"].root))
+    with pytest.raises(Crash):
+        demux_batch(tables, mixed, batch_id=0)
+    kill_seam.disarm()
+    tables = {n: LakeTable.load(spark, t.root) for n, t in tables.items()}
+    assert tables["tbl_a"].has_batch(0) and not tables["tbl_b"].has_batch(0)
     seq_a = tables["tbl_a"].manifest["seq"]
     out2 = demux_batch(tables, mixed, batch_id=0)
     assert out2["tbl_a"].get("skipped")

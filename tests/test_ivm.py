@@ -169,35 +169,35 @@ def test_ivm_rejects_foreign_source(spark, tmp_root):
         IncrementalAggView.load(spark, f"{tmp_root}/v", t2)
 
 
-def test_ivm_crash_between_merge_and_state_advance(spark, tmp_root):
-    """Exactly-once across the crash window: the merge lands, the state
-    write 'crashes', the SOURCE ADVANCES, and the retry must not
-    double-apply the already-merged delta (the WAL pins the window)."""
+def test_ivm_crash_between_merge_and_state_advance(spark, tmp_root, kill_seam):
+    """Exactly-once across the crash window: the view MERGE's manifest
+    (which carries the refreshed seq) links, the process dies right after,
+    the SOURCE ADVANCES, and the retry must not double-apply the
+    already-merged delta."""
+    from conftest import Crash, link_into
+
     t = _source(spark, f"{tmp_root}/src", [(1, "a", 10), (2, "b", 20)])
     view = IncrementalAggView.create(
         spark, f"{tmp_root}/view", t, ["event_type"], ["cents"]
     )
     view.refresh()
     _apply(spark, t, ups=[(3, "a", 5)])
+    crashed_until = t.manifest["seq"]
 
-    orig = view._write_state
-
-    def crash_on_advance(last_seq, pending=None):
-        if pending is None:
-            raise RuntimeError("simulated crash before state advance")
-        return orig(last_seq, pending=pending)
-
-    view._write_state = crash_on_advance
-    with pytest.raises(RuntimeError, match="simulated crash"):
+    kill_seam.arm(kill_at=1, after=True, match=link_into(view.root))
+    with pytest.raises(Crash):
         view.refresh()
-    view._write_state = orig
+    kill_seam.disarm()
 
     # the source moves on before the retry
     _apply(spark, t, ups=[(4, "b", 7)], dels=[1])
 
     recovered = IncrementalAggView.load(spark, f"{tmp_root}/view", t)
+    assert recovered.last_refreshed_seq == crashed_until
     st = recovered.refresh()
-    assert st["skipped"] is False and st.get("windows", 1) >= 2
+    # the retry folds only what the source committed after the crash
+    assert st["skipped"] is False
+    assert (st["since_seq"], st["until_seq"]) == (crashed_until, t.manifest["seq"])
     _assert_view_matches(recovered)
     got = {
         r["event_type"]: (r["n_rows"], r["sum_cents"])

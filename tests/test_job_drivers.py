@@ -52,7 +52,7 @@ def test_cdc_job_batch_then_rerun_noop(spark, tmp_root):
     )
     assert out[-1]["batches_applied"] == 2 and out[-1]["mode"] == "batch"
     assert out[-1]["rows_quarantined"] == 21  # ceil(2000/97)
-    # rerun: commit log makes it a no-op; quarantine count unchanged
+    # rerun: the manifest's batch set makes it a no-op; quarantine count unchanged
     out2 = _run(
         "run_cdc_job.py", "--events-dir", events_dir, "--table-root", table_root,
         "--quarantine-root", dlq_root,

@@ -1,5 +1,5 @@
 """LakeTable format: create/append/read, MERGE upsert+delete, bucket
-pruning, schema evolution by field id, exactly-once batch markers."""
+pruning, schema evolution by field id, exactly-once batch ids."""
 
 import os
 

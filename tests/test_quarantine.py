@@ -4,6 +4,7 @@ table state (which must equal the oracle over the CLEAN events only)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_migration_validator_spark.cdc import (
@@ -149,23 +150,32 @@ def test_replay_with_quarantine_mor(spark, tmp_root):
     _assert_clean_state(table, dlq, bad)
 
 
-def test_quarantine_redelivery_is_exactly_once(spark, tmp_root):
-    """A batch re-applied WITHOUT the main table's commit marker (the crash
-    window: quarantine upserted, main commit lost) must not duplicate
-    dead-letter rows — the (batch_id, event_seq)-keyed MERGE absorbs it."""
+def test_quarantine_redelivery_is_exactly_once(spark, tmp_root, kill_seam):
+    """A batch re-applied after a crash at the main table's manifest link
+    (the crash window: quarantine upserted, main commit lost) must not
+    duplicate dead-letter rows — the (batch_id, event_seq)-keyed MERGE
+    absorbs it."""
+    from conftest import Crash, link_into
+
     n = 1_000
     ev = _corrupt(change_events(spark, n, n_repos=10, seed=7, batch_size=n), n)
     table = _new_table(spark, tmp_root)
     dlq = make_quarantine_table(spark, os.path.join(tmp_root, "dlq"))
 
-    apply_batch(table, ev, batch_id=0, quarantine=dlq)
+    kill_seam.arm(kill_at=1, match=link_into(table.root))
+    with pytest.raises(Crash):
+        apply_batch(table, ev, batch_id=0, quarantine=dlq)
+    kill_seam.disarm()
+    table = LakeTable.load(spark, table.root)
+    dlq = LakeTable.load(spark, dlq.root)
+    assert not table.has_batch(0)
     first = sorted(
         (r["batch_id"], r["event_seq"]) for r in dlq.read().collect()
     )
     assert first
-    # simulate the crash window: wipe the main commit marker, re-apply
-    os.remove(os.path.join(table.root, "_commits", "batch-0.json"))
+    # redeliver the batch whose main commit was lost
     apply_batch(table, ev, batch_id=0, quarantine=dlq)
+    assert table.has_batch(0)
     second = sorted(
         (r["batch_id"], r["event_seq"]) for r in dlq.read().collect()
     )

@@ -1,4 +1,4 @@
-"""Snapshot rollback (metadata-only undo + batch-marker retraction) and
+"""Snapshot rollback (metadata-only undo + batch-set restore) and
 bucket-spec evolution (rebucket)."""
 
 import os

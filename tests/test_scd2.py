@@ -270,3 +270,25 @@ def test_mor_streaming_scd2_with_compaction(spark, tmp_path):
     )
     assert t.manifest["seq"] == seq
     assert _rows(t.read()) == _rows(scd2_expected(ev))
+
+
+def test_crash_after_batch_link_resumes_on_fresh_handle(spark, tmp_path, ev, kill_seam):
+    """The process dies right after batch 2's manifest link.  The batch is
+    recorded in that very manifest, so a fresh handle skips it and the
+    resumed stream converges on the window oracle (before the batch set
+    moved into the manifest, this re-applied batch 2 and wedged the stream
+    on the inverted-interval guard)."""
+    from conftest import Crash, link_into
+
+    from data_migration_validator_spark.lake import LakeTable
+
+    t = _hist(spark, tmp_path, "m_crash")
+    kill_seam.arm(kill_at=3, after=True, match=link_into(t.root))
+    with pytest.raises(Crash):
+        scd2_replay(t, ev, merge_mode="mor")
+    kill_seam.disarm()
+    t2 = LakeTable.load(spark, t.root)
+    assert t2.has_batch(2) and not t2.has_batch(3)
+    st = scd2_replay(t2, ev, merge_mode="mor")
+    assert st["batches"] == 4
+    assert _rows(t2.read()) == _rows(scd2_expected(ev))

@@ -4,6 +4,8 @@ expected verdict)."""
 
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from data_migration_validator_spark.cdc import (
@@ -131,11 +133,14 @@ def test_scenario_schema_evolution(spark, tmp_root):
     assert rc["mismatches"] == 0 and rc["src_extras"] == 0 and rc["tgt_extras"] == 0
 
 
-def test_schema_evolution_idempotent_under_crash_retry(spark, tmp_root):
-    """Crash window: schema evolution committed its manifests but the batch
-    marker was lost.  Redelivery must no-op the already-applied actions
-    (add exists / rename done / widen done) instead of raising and wedging
-    the stream, and the final state must match the clean-run oracle."""
+def test_schema_evolution_idempotent_under_crash_retry(spark, tmp_root, kill_seam):
+    """Crash window: schema evolution committed its manifests but the
+    process died before the MERGE's manifest link (the commit that records
+    the batch).  Redelivery must no-op the already-applied actions (add
+    exists / rename done / widen done) instead of raising and wedging the
+    stream, and the final state must match the clean-run oracle."""
+    from conftest import Crash, link_into
+
     n = 600
     ev = change_events(
         spark, n, n_repos=8, seed=45, batch_size=600,
@@ -149,9 +154,14 @@ def test_schema_evolution_idempotent_under_crash_retry(spark, tmp_root):
         spark, os.path.join(tmp_root, "t"), SCHEMA, key_cols=["repo", "path"],
         num_buckets=4,
     )
-    apply_batch(t, ev, batch_id=0)
-    # lose the marker (crash after schema commits + merge, before marker)
-    os.remove(os.path.join(t.root, "_commits", "batch-0.json"))
+    # links 1-3 commit the three schema changes; die at the MERGE's link
+    kill_seam.arm(kill_at=4, match=link_into(t.root))
+    with pytest.raises(Crash):
+        apply_batch(t, ev, batch_id=0)
+    kill_seam.disarm()
+    t = LakeTable.load(spark, t.root)
+    assert t.schema.field_by_name("stars").type == "bigint"
+    assert not t.has_batch(0)
     apply_batch(t, ev, batch_id=0)  # must not raise
     t2 = LakeTable.load(spark, t.root)
     assert t2.schema.field_by_name("stars").type == "bigint"

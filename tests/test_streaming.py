@@ -73,7 +73,7 @@ def test_stream_resume_from_checkpoint_is_noop_then_incremental(spark, tmp_root)
 
 def test_stream_sink_is_idempotent_across_fresh_checkpoint(spark, tmp_root):
     """Kill-and-lose-the-checkpoint worst case: a fresh checkpoint re-reads
-    everything, but the batch commit log absorbs the replay (same batchIds
+    everything, but the manifest's batch set absorbs the replay (same batchIds
     re-delivered) — state unchanged, no duplicate application."""
     ev = change_events(spark, 1500, n_repos=10, seed=11, batch_size=500)
     events_dir = os.path.join(tmp_root, "events")
@@ -94,7 +94,7 @@ def test_stream_sink_is_idempotent_across_fresh_checkpoint(spark, tmp_root):
 def test_exactly_once_when_sink_crashes_after_commit(spark, tmp_root):
     """Crash INSIDE foreachBatch after the lake commit succeeded: the
     streaming engine replays that batch on restart (at-least-once), the
-    batch commit log recognizes the batchId and no-ops — final state is
+    manifest's batch set recognizes the batchId and no-ops — final state is
     exactly-once despite the redelivery."""
     import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
@@ -146,7 +146,7 @@ def test_exactly_once_when_sink_crashes_after_commit(spark, tmp_root):
 def test_ordering_gate_protects_ingest_from_row_redelivery(spark, tmp_root):
     """A tailing source can re-emit OLD events under NEW file names (e.g. a
     re-uploaded binlog segment).  New files mean new micro-batches with new
-    batchIds, so the batch commit log cannot catch it — and replaying stale
+    batchIds, so the manifest's batch set cannot catch it — and replaying stale
     events through the LWW MERGE would overwrite newer rows.  The gated
     pipeline drops them; the ungated one demonstrably corrupts."""
     from data_migration_validator_spark.validation import reconcile_counts
