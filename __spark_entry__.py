@@ -731,10 +731,9 @@ def q_ordinal_check(spark, sf_dir):
 
 
 def q_schema_compatibility(spark, sf_dir):
-    """J6+J8: name/type compare + regex-matrix compatibility theta-join
-    (validation_summary.py:388-393, 502-504)."""
+    """J6+J8: name/type compare + datatype compatibility against the
+    widen-only lattice (validation_summary.py:388-393, 502-504)."""
     from data_migration_validator_spark.validation.schema_check import (
-        default_compatibility_matrix,
         name_type_check,
         type_compatibility,
     )
@@ -742,7 +741,7 @@ def q_schema_compatibility(spark, sf_dir):
     nt = name_type_check(
         _store_df(spark, _SRC_STORE, "src"), _store_df(spark, _TGT_STORE, "tgt")
     )
-    out = type_compatibility(nt, default_compatibility_matrix(spark))
+    out = type_compatibility(nt)
     return out.select(
         "col_key",
         "src_data_type",

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..lake.table import LakeTable
+from ..session import local_frame
 
 # immutable ids of the event payload fields == ids of the initial
 # repo_content schema columns (FIXTURES.md §F1/F2).
@@ -477,9 +478,11 @@ def _emit_lineage(
     lineage: LakeTable, batch_id, rows, latency_ms: int
 ) -> None:
     """Per-partition lineage rows (event offsets, row counts, apply latency)
-    appended to the metrics table — north rule's lineage requirement."""
+    appended to the metrics table — north rule's lineage requirement.  The
+    rows are built on the driver (``local_frame``): no Python-worker job."""
     now = time.time()
-    ldf = lineage.spark.createDataFrame(
+    ldf = local_frame(
+        lineage.spark,
         [
             (
                 int(batch_id) if batch_id is not None and str(batch_id).isdigit() else -1,
@@ -493,11 +496,9 @@ def _emit_lineage(
             )
             for r in rows
         ],
-        schema=(
-            "batch_id long, partition_id int, first_event_seq long, "
-            "last_event_seq long, rows_upserted long, rows_delete_requested long, "
-            "apply_latency_ms long, committed_at double"
-        ),
+        "batch_id long, partition_id int, first_event_seq long, "
+        "last_event_seq long, rows_upserted long, rows_delete_requested long, "
+        "apply_latency_ms long, committed_at double",
     )
     lineage.append(ldf)
 

@@ -47,6 +47,20 @@ def local_frame(
     return spark.createDataFrame(table, struct)
 
 
+def submitted_conf() -> dict[str, str]:
+    """The ``spark.*`` settings a ``spark-submit`` launch gave this driver
+    (``--master``, ``--conf``, ``spark-defaults.conf``); empty when the
+    driver runs under plain ``python``.  Job drivers pass them to
+    :func:`get_spark` as ``extra_conf``, so its settings are the defaults
+    and whatever was submitted still wins."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:  # not launched by spark-submit
+        return {}
+    from pyspark import SparkContext
+
+    SparkContext._ensure_initialized()
+    return {t._1(): t._2() for t in SparkContext._jvm.SparkConf(True).getAll()}
+
+
 def get_spark(
     app_name: str = "data_migration_validator_spark",
     cores: int | None = None,

@@ -21,7 +21,6 @@ from .reconcile import (  # noqa: F401
     with_row_digest,
 )
 from .schema_check import (  # noqa: F401
-    default_compatibility_matrix,
     name_type_check,
     ordinal_check,
     schema_store,

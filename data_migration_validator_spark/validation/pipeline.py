@@ -35,13 +35,7 @@ from .reconcile import (
     mismatch_rows_from_annotated,
     windowed_from_annotated,
 )
-from .schema_check import (
-    default_compatibility_matrix,
-    name_type_check,
-    ordinal_check,
-    schema_store,
-    type_compatibility,
-)
+from .schema_check import schema_checks
 from .summary import summary_from_annotated
 
 
@@ -63,11 +57,14 @@ def run_validation(
     annotated frame, persisted under ``"annotated"`` — feeds reconcile
     counts, per-column metrics, row-level mismatches, extras both sides and
     windowed buckets as narrow derivations; PK validation scans each input
-    once (agg only, no join); summary statuses come from one ``.collect()``
-    of one cross-joined aggregate row.  The reference issues 5-6 independent
-    src×tgt joins for the same reports (migration-data-validation.py:
-    887-1384).  Callers that materialize many reports should leave the
-    annotated frame persisted until done, then
+    once (agg only, no join); the schema checks run on the driver from the
+    two StructTypes, with no Spark job.  The summary is the only action:
+    on the budget test's three-column input a call runs 9 Spark jobs as AQE
+    counts them, against 20 when the schema checks were Spark joins
+    (``tests/test_job_budget.py::test_run_validation_job_budget``).  The
+    reference issues 5-6 independent src×tgt joins for the same reports
+    (migration-data-validation.py:887-1384).  Callers that materialize many
+    reports should leave the annotated frame persisted until done, then
     ``reports["annotated"].unpersist()``.
 
     Reference config surface (README.md:199-253):
@@ -106,13 +103,7 @@ def run_validation(
             "addtnl_filters cannot be combined with bucket_short_circuit"
         )
 
-    src_store = schema_store(spark, src.schema, "src")
-    tgt_store = schema_store(spark, tgt.schema, "tgt")
-    ordinal = ordinal_check(src_store, tgt_store)
-    name_type = name_type_check(src_store, tgt_store)
-    compatibility = type_compatibility(
-        name_type, default_compatibility_matrix(spark)
-    )
+    schema_reports, schema_bad = schema_checks(spark, src.schema, tgt.schema)
 
     # PK validation always scans the FULL sides: it is per-side (no join),
     # and a same-key/different-payload duplicate pair does not cancel in the
@@ -145,7 +136,7 @@ def run_validation(
         return _assemble_reports(
             ann, src, tgt, jsrc, jtgt, key_cols, compare_cols, date_col,
             quick, bucket_short_circuit, clean_matches, clean_src,
-            ordinal, name_type, compatibility, pk_src, pk_tgt,
+            schema_reports, schema_bad, pk_src, pk_tgt,
             mismatch_exclude_fields, addtnl_filters,
         )
     except Exception:
@@ -159,7 +150,7 @@ def run_validation(
 def _assemble_reports(
     ann, src, tgt, jsrc, jtgt, key_cols, compare_cols, date_col,
     quick, bucket_short_circuit, clean_matches, clean_src,
-    ordinal, name_type, compatibility, pk_src, pk_tgt,
+    schema_reports, schema_bad, pk_src, pk_tgt,
     mismatch_exclude_fields=None, addtnl_filters=None,
 ):
     counts = counts_from_annotated(ann)
@@ -191,9 +182,7 @@ def _assemble_reports(
 
     reports: dict = {
         "annotated": ann,
-        "ordinal": ordinal,
-        "name_type": name_type,
-        "compatibility": compatibility,
+        **schema_reports,
         "reconcile_counts": counts,
         "column_metrics": col_metrics,
         "pk_src": pk_src,
@@ -276,7 +265,7 @@ def _assemble_reports(
         reports["windowed"] = windowed
 
     summary = summary_from_annotated(
-        ann, compare_cols, pk_src, pk_tgt, name_type, ordinal, compatibility,
+        ann, compare_cols, pk_src, pk_tgt, schema_bad,
         mismatch_exclude_fields=mismatch_exclude_fields,
     )
     if clean_matches:

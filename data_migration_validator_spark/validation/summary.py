@@ -2,8 +2,8 @@
 (``validation_sqls.py:24-63``; evaluators ``validation_summary.py:253-618``).
 
 Each status is SUCCESS/FAILED; ``validation_status`` is SUCCESS iff all are.
-Computed driver-side from the check DataFrames' (tiny) aggregate results —
-the expensive passes already happened inside the check functions.
+Both entry points reduce their inputs to plain counts and feed the one
+conjunction, :func:`_statuses`.
 """
 
 from __future__ import annotations
@@ -11,9 +11,56 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .schema_check import schema_failures
+
 
 def _status(ok: bool) -> str:
     return "SUCCESS" if ok else "FAILED"
+
+
+def _statuses(c: dict, schema: dict, excluded: set[str]) -> dict:
+    """The conjunction over counts: ``c`` holds matches, mismatches,
+    src_extras, tgt_extras, mismatched_columns, mismatched_columns_kept and
+    both sides' pk_violations; ``schema`` is ``schema_check.schema_failures``."""
+    statuses = {
+        "row_count_status": _status(c["src_extras"] == 0 and c["tgt_extras"] == 0),
+        "hash_match_status": _status(
+            c["mismatches"] == 0 and c["src_extras"] == 0 and c["tgt_extras"] == 0
+        ),
+        "data_mismatch_status": _status(c["mismatched_columns"] == 0),
+        "mismatches_after_exclusion_status": _status(
+            c["mismatched_columns_kept"] == 0
+        ),
+        "extras_status": _status(c["src_extras"] == 0 and c["tgt_extras"] == 0),
+        "primary_key_compliance_status": _status(
+            c["src_pk_violations"] == 0 and c["tgt_pk_violations"] == 0
+        ),
+        "column_names_status": _status(schema["name_bad"] == 0),
+        "ordinal_status": _status(schema["ord_bad"] == 0),
+        "datatype_compatibility_status": _status(schema["compat_bad"] == 0),
+    }
+    if "comment_bad" in schema:
+        statuses["comment_compare_status"] = _status(schema["comment_bad"] == 0)
+    # final conjunction mirrors the reference's read side (validation_sqls.
+    # py:24-63): the AFTER-EXCLUSION mismatch status gates the final verdict
+    # — the raw hash/data-mismatch statuses are reported but, with exclusions
+    # configured, an expected mismatch in an excluded audit column must not
+    # fail the run.  Without exclusions the two statuses coincide, so the
+    # historical behavior is unchanged.
+    gating = [
+        k
+        for k in statuses
+        if k not in ("data_mismatch_status", "hash_match_status")
+        or not excluded
+    ]
+    statuses["validation_status"] = _status(
+        all(statuses[k] == "SUCCESS" for k in gating)
+    )
+    statuses.update(
+        {k: c[k] for k in ("matches", "mismatches", "src_extras", "tgt_extras")}
+    )
+    statuses["datatype_mismatch_columns"] = schema["dtype_bad"]
+    return statuses
 
 
 def summary_from_annotated(
@@ -21,26 +68,23 @@ def summary_from_annotated(
     compare_cols: list[str],
     pk_src: DataFrame,
     pk_tgt: DataFrame,
-    name_type: DataFrame,
-    ordinal: DataFrame,
-    compatibility: DataFrame,
+    schema: dict,
     mismatch_exclude_fields: list[str] | None = None,
 ) -> dict:
-    """All summary statuses from ONE ``.collect()`` of ONE aggregated row.
-
-    Cross-joins the 1-row aggregates (annotated-frame counters + per-column
-    mismatch bits, both PK checks, schema-check failure counts) into a
-    single plan, so the whole summary costs one Spark job instead of the
-    eight the per-DataFrame evaluators issue.  The annotated frame should be
-    persisted by the caller — this is one of its many derivations.
+    """All summary statuses from ONE ``.collect()`` of ONE aggregated row:
+    the annotated-frame counters and per-column mismatch bits cross-joined
+    with both PK checks.  ``schema`` holds the failure counts of the
+    driver-side schema checks (``schema_check.schema_checks``).  The
+    annotated frame should be persisted by the caller — this is one of its
+    many derivations.  A whole ``run_validation`` runs 9 Spark jobs on the
+    budget test's input
+    (``tests/test_job_budget.py::test_run_validation_job_budget``).
 
     ``mismatch_exclude_fields`` (reference ``validation_mapping.
     mismatch_exclude_fields``, README.md:199-205) feeds the separate
     ``mismatches_after_exclusion_status``: FAILED only when a NON-excluded
     column mismatches (``validation_summary.py:552-568``) — the excluded
-    counter rides the same single aggregation, zero extra passes.  The
-    ``comment_compare_status`` (SUM:361, 381-391) is folded in when the
-    ``name_type`` frame carries a ``comment_compare`` column.
+    counter rides the same single aggregation, zero extra passes.
     """
     excluded = {c.lower() for c in (mismatch_exclude_fields or [])}
     aggs = [
@@ -59,87 +103,15 @@ def summary_from_annotated(
             bad_col_kept = bad_col_kept + bit
     aggs.append(bad_col.alias("mismatched_columns"))
     aggs.append(bad_col_kept.alias("mismatched_columns_kept"))
-    wide = ann.agg(*aggs)
-
-    pks = pk_src.select(F.col("pk_violations").alias("src_pk_violations"))
-    pkt = pk_tgt.select(F.col("pk_violations").alias("tgt_pk_violations"))
-    has_comments = "comment_compare" in name_type.columns
-    nt_aggs = [
-        F.sum(F.when(F.col("col_name_compare") == "MISMATCH", 1).otherwise(0)).alias("name_bad"),
-        F.sum(F.when(F.col("datatype_compare") == "MISMATCH", 1).otherwise(0)).alias("dtype_bad"),
-    ]
-    if has_comments:
-        nt_aggs.append(
-            F.sum(
-                F.when(F.col("comment_compare") == "MISMATCH", 1).otherwise(0)
-            ).alias("comment_bad")
-        )
-    schema_counts = (
-        name_type.agg(*nt_aggs)
-        .crossJoin(
-            ordinal.agg(
-                F.sum(F.when(F.col("ordinal_compare") == "MISMATCH", 1).otherwise(0)).alias("ord_bad")
-            )
-        )
-        .crossJoin(
-            compatibility.agg(
-                F.sum(F.when(~F.col("compatible"), 1).otherwise(0)).alias("compat_bad")
-            )
-        )
-    )
     row = (
-        wide.crossJoin(pks).crossJoin(pkt).crossJoin(schema_counts)
+        ann.agg(*aggs)
+        .crossJoin(pk_src.select(F.col("pk_violations").alias("src_pk_violations")))
+        .crossJoin(pk_tgt.select(F.col("pk_violations").alias("tgt_pk_violations")))
         .collect()[0]
         .asDict()
     )
     # empty frames aggregate to NULL sums/maxes
-    for k in row:
-        row[k] = row[k] or 0
-
-    statuses = {
-        "row_count_status": _status(row["src_extras"] == 0 and row["tgt_extras"] == 0),
-        "hash_match_status": _status(
-            row["mismatches"] == 0 and row["src_extras"] == 0 and row["tgt_extras"] == 0
-        ),
-        "data_mismatch_status": _status(row["mismatched_columns"] == 0),
-        "mismatches_after_exclusion_status": _status(
-            row["mismatched_columns_kept"] == 0
-        ),
-        "extras_status": _status(row["src_extras"] == 0 and row["tgt_extras"] == 0),
-        "primary_key_compliance_status": _status(
-            row["src_pk_violations"] == 0 and row["tgt_pk_violations"] == 0
-        ),
-        "column_names_status": _status(row["name_bad"] == 0),
-        "ordinal_status": _status(row["ord_bad"] == 0),
-        "datatype_compatibility_status": _status(row["compat_bad"] == 0),
-    }
-    if has_comments:
-        statuses["comment_compare_status"] = _status(row["comment_bad"] == 0)
-    # final conjunction mirrors the reference's read side (validation_sqls.
-    # py:24-63): the AFTER-EXCLUSION mismatch status gates the final verdict
-    # — the raw hash/data-mismatch statuses are reported but, with exclusions
-    # configured, an expected mismatch in an excluded audit column must not
-    # fail the run.  Without exclusions the two statuses coincide, so the
-    # historical behavior is unchanged.
-    gating = [
-        k
-        for k in statuses
-        if k not in ("data_mismatch_status", "hash_match_status")
-        or not excluded
-    ]
-    statuses["validation_status"] = _status(
-        all(statuses[k] == "SUCCESS" for k in gating)
-    )
-    statuses.update(
-        {
-            "matches": row["matches"],
-            "mismatches": row["mismatches"],
-            "src_extras": row["src_extras"],
-            "tgt_extras": row["tgt_extras"],
-            "datatype_mismatch_columns": row["dtype_bad"],
-        }
-    )
-    return statuses
+    return _statuses({k: v or 0 for k, v in row.items()}, schema, excluded)
 
 
 def validation_summary(
@@ -160,68 +132,23 @@ def validation_summary(
     - primary_key_compliance: count==count-distinct (SUM:263),
     - data_mismatch: count_if(mismatches != 0) over columns (SUM:552-568),
     - column_names / ordinal / datatype / compatibility (SUM:309-506).
+    Every input is a one-row aggregate or one row per column: each is
+    collected and counted on the driver.
     """
-    rc = reconcile_counts_df.collect()[0].asDict()
     # empty inputs: aggregates over zero rows are NULL, and None == 0 is
     # False — two identical EMPTY tables would report FAILED everywhere and
-    # persist_summary's int(None) would raise (summary_from_annotated
-    # coalesces the same way)
-    rc = {k: (0 if v is None else v) for k, v in rc.items()}
-    pks = pk_src.collect()[0].asDict()
-    pkt = pk_tgt.collect()[0].asDict()
-    excluded = {c.lower() for c in (mismatch_exclude_fields or [])}
-    col_bad = column_metrics.filter(F.col("mismatches") != 0).count()
-    col_bad_kept = (
-        column_metrics.filter(
-            (F.col("mismatches") != 0)
-            & ~F.lower(F.col("column_name")).isin(*excluded)
-        ).count()
-        if excluded
-        else col_bad
+    # persist_summary's int(None) would raise
+    c = {k: v or 0 for k, v in reconcile_counts_df.collect()[0].asDict().items()}
+    c["src_pk_violations"] = pk_src.collect()[0]["pk_violations"]
+    c["tgt_pk_violations"] = pk_tgt.collect()[0]["pk_violations"]
+    excluded = {x.lower() for x in (mismatch_exclude_fields or [])}
+    bad_cols = [r["column_name"] for r in column_metrics.collect() if r["mismatches"]]
+    c["mismatched_columns"] = len(bad_cols)
+    c["mismatched_columns_kept"] = sum(n.lower() not in excluded for n in bad_cols)
+    schema = schema_failures(
+        ordinal.collect(),
+        name_type.collect(),
+        compatibility.collect(),
+        "comment_compare" in name_type.columns,
     )
-    name_bad = name_type.filter(
-        (F.col("col_name_compare") == "MISMATCH")
-    ).count()
-    dtype_bad = name_type.filter(F.col("datatype_compare") == "MISMATCH").count()
-    comment_bad = (
-        name_type.filter(F.col("comment_compare") == "MISMATCH").count()
-        if "comment_compare" in name_type.columns
-        else None
-    )
-    ord_bad = ordinal.filter(F.col("ordinal_compare") == "MISMATCH").count()
-    compat_bad = compatibility.filter(~F.col("compatible")).count()
-
-    statuses = {
-        "row_count_status": _status(rc["src_extras"] == 0 and rc["tgt_extras"] == 0),
-        "hash_match_status": _status(rc["mismatches"] == 0 and rc["src_extras"] == 0 and rc["tgt_extras"] == 0),
-        "data_mismatch_status": _status(col_bad == 0),
-        "mismatches_after_exclusion_status": _status(col_bad_kept == 0),
-        "extras_status": _status(rc["src_extras"] == 0 and rc["tgt_extras"] == 0),
-        "primary_key_compliance_status": _status(
-            pks["pk_violations"] == 0 and pkt["pk_violations"] == 0
-        ),
-        "column_names_status": _status(name_bad == 0),
-        "ordinal_status": _status(ord_bad == 0),
-        "datatype_compatibility_status": _status(compat_bad == 0),
-    }
-    if comment_bad is not None:
-        statuses["comment_compare_status"] = _status(comment_bad == 0)
-    gating = [
-        k
-        for k in statuses
-        if k not in ("data_mismatch_status", "hash_match_status")
-        or not excluded
-    ]
-    statuses["validation_status"] = _status(
-        all(statuses[k] == "SUCCESS" for k in gating)
-    )
-    statuses.update(
-        {
-            "matches": rc["matches"],
-            "mismatches": rc["mismatches"],
-            "src_extras": rc["src_extras"],
-            "tgt_extras": rc["tgt_extras"],
-            "datatype_mismatch_columns": dtype_bad,
-        }
-    )
-    return statuses
+    return _statuses(c, schema, excluded)

@@ -23,12 +23,11 @@ import argparse
 import json
 import os
 
-from pyspark.sql import SparkSession
-
 from data_migration_validator_spark.cdc.apply import make_lineage_table
 from data_migration_validator_spark.cdc.quarantine import make_quarantine_table
 from data_migration_validator_spark.cdc.replay import pending_batches, replay
 from data_migration_validator_spark.lake.table import LakeTable
+from data_migration_validator_spark.session import get_spark, submitted_conf
 from data_migration_validator_spark.streaming.stream import run_stream_once
 
 REPO_CONTENT_SCHEMA = [
@@ -137,7 +136,7 @@ def main() -> None:
         if bad:
             ap.error(f"{', '.join(bad)} not supported with --demux-tables")
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark("cdc_job", extra_conf=submitted_conf())
     if args.demux_tables:
         _run_demux(spark, args)
         return

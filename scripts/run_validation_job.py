@@ -19,8 +19,7 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import SparkSession
-
+from data_migration_validator_spark.session import get_spark, submitted_conf
 from data_migration_validator_spark.validation import (
     load_mappings_csv,
     make_anomaly_table,
@@ -50,7 +49,7 @@ def main() -> None:
                          "(HLL single pass) for cross-run drift reports")
     args = ap.parse_args()
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark("validation_job", extra_conf=submitted_conf())
     mappings = load_mappings_csv(spark, args.mapping_csv)
     summary_t = make_summary_table(spark, f"{args.metrics_root}/summary")
     log_t = make_log_table(spark, f"{args.metrics_root}/log")

@@ -24,6 +24,81 @@ def _run(script, *args):
     return [json.loads(l) for l in p.stdout.splitlines() if l.startswith("{")]
 
 
+def _validation_inputs(spark, tmp_root, n_src, n_tgt):
+    """(mapping csv, data dir) for one pair: t_src holds ids 0..n_src-1,
+    t_tgt the first n_tgt of its rows."""
+    data_dir = os.path.join(tmp_root, "data")
+    base = spark.createDataFrame(
+        [(i, i * 2.0) for i in range(n_src)], "id long, amt double"
+    )
+    base.write.parquet(os.path.join(data_dir, "t_src.parquet"))
+    base.limit(n_tgt).write.parquet(os.path.join(data_dir, "t_tgt.parquet"))
+    mapping_csv = os.path.join(tmp_root, "map.csv")
+    with open(mapping_csv, "w") as f:
+        f.write(
+            "table_family,src_table,tgt_table,key_cols,compare_cols,filter,"
+            "date_col,quick_validation,is_active\n"
+            "fam_t,t_src,t_tgt,id,,,,false,true\n"
+        )
+    return mapping_csv, data_dir
+
+
+# runs a driver script in-process, then prints the settings its session ran
+# with: the conf the driver actually used, read inside the driver run
+_CONF_PROBE = """
+import json, runpy, sys
+from pyspark.sql import SparkSession
+sys.argv = sys.argv[1:]
+runpy.run_path(sys.argv[0], run_name="__main__")
+conf = SparkSession.getActiveSession().conf
+print(json.dumps({k: conf.get(k) for k in (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+)}))
+"""
+
+
+def test_job_drivers_use_engine_session_settings(spark, tmp_root):
+    """Both drivers build their session with session.get_spark's settings
+    (not Spark's 200 shuffle and state-store partitions); a conf given to
+    spark-submit still wins over them."""
+    from data_migration_validator_spark.cdc import change_events, write_events_batched
+    from data_migration_validator_spark.session import default_cores
+
+    probe = os.path.join(tmp_root, "probe.py")
+    with open(probe, "w") as f:
+        f.write(_CONF_PROBE)
+    events_dir = os.path.join(tmp_root, "events")
+    write_events_batched(
+        change_events(spark, 200, n_repos=5, seed=3, batch_size=200), events_dir
+    )
+    env = dict(os.environ, PYTHONPATH=REPO)
+
+    def conf_of(cmd):
+        p = subprocess.run(cmd, capture_output=True, text=True, env=env, cwd=REPO)
+        assert p.returncode == 0, p.stderr[-2000:]
+        return json.loads(p.stdout.splitlines()[-1])
+
+    cdc = conf_of([
+        sys.executable, probe, os.path.join(REPO, "scripts", "run_cdc_job.py"),
+        "--events-dir", events_dir,
+        "--table-root", os.path.join(tmp_root, "table"), "--num-buckets", "4",
+    ])
+    assert cdc["spark.sql.shuffle.partitions"] == str(max(default_cores(), 8))
+    assert cdc["spark.sql.adaptive.advisoryPartitionSizeInBytes"] == "16m"
+
+    mapping_csv, data_dir = _validation_inputs(spark, tmp_root, 20, 20)
+    submitted = conf_of([
+        "spark-submit", "--master", "local[2]",
+        "--conf", "spark.sql.shuffle.partitions=3", probe,
+        os.path.join(REPO, "scripts", "run_validation_job.py"),
+        "--mapping-csv", mapping_csv, "--data-dir", data_dir,
+        "--metrics-root", os.path.join(tmp_root, "metrics"), "--run-id", "c1",
+    ])
+    assert submitted["spark.sql.shuffle.partitions"] == "3"
+    assert submitted["spark.sql.adaptive.advisoryPartitionSizeInBytes"] == "16m"
+
+
 def test_cdc_job_batch_then_rerun_noop(spark, tmp_root):
     from pyspark.sql import functions as F
 
@@ -121,21 +196,7 @@ def test_cdc_job_with_incremental_view(spark, tmp_root):
 
 
 def test_validation_job_end_to_end(spark, tmp_root):
-    data_dir = os.path.join(tmp_root, "data")
-    os.makedirs(data_dir)
-    base = spark.createDataFrame(
-        [(i, i * 2.0) for i in range(50)], "id long, amt double"
-    )
-    base.write.parquet(os.path.join(data_dir, "t_src.parquet"))
-    base.limit(45).write.parquet(os.path.join(data_dir, "t_tgt.parquet"))
-
-    mapping_csv = os.path.join(tmp_root, "map.csv")
-    with open(mapping_csv, "w") as f:
-        f.write(
-            "table_family,src_table,tgt_table,key_cols,compare_cols,filter,"
-            "date_col,quick_validation,is_active\n"
-            "fam_t,t_src,t_tgt,id,,,,false,true\n"
-        )
+    mapping_csv, data_dir = _validation_inputs(spark, tmp_root, 50, 45)
     out = _run(
         "run_validation_job.py",
         "--mapping-csv", mapping_csv,

@@ -8,7 +8,6 @@ from pyspark.sql import types as T
 
 from data_migration_validator_spark.validation import (
     column_mismatch_metrics,
-    default_compatibility_matrix,
     extras,
     full_outer_report,
     hash_reconcile,
@@ -121,7 +120,7 @@ def test_schema_checks_and_compatibility(spark):
     bad = {r["col_key"] for r in nt.filter("datatype_compare = 'MISMATCH'").collect()}
     assert bad == {"born", "salary"}
 
-    compat = type_compatibility(nt, default_compatibility_matrix(spark))
+    compat = type_compatibility(nt)
     by_col = {r["col_key"]: r["compatible"] for r in compat.collect()}
     # date->timestamp and int->string are legal widenings; names match
     assert by_col["born"] and by_col["salary"] and by_col["id"]
@@ -129,7 +128,7 @@ def test_schema_checks_and_compatibility(spark):
     # a narrowing shows as incompatible
     s_bad = T.StructType.fromDDL("id bigint, name string, born date, salary tinyint")
     nt2 = name_type_check(src_store, schema_store(spark, s_bad, "tgt"))
-    compat2 = type_compatibility(nt2, default_compatibility_matrix(spark))
+    compat2 = type_compatibility(nt2)
     assert not {r["col_key"]: r["compatible"] for r in compat2.collect()}["salary"]
 
 
@@ -144,7 +143,7 @@ def test_validation_summary_conjunction(spark, pair):
         column_mismatch_metrics(src, tgt, ["id"]),
         nt,
         ordinal_check(schema_store(spark, st, "src"), schema_store(spark, st, "tgt")),
-        type_compatibility(nt, default_compatibility_matrix(spark)),
+        type_compatibility(nt),
     )
     assert summary["validation_status"] == "FAILED"
     assert summary["primary_key_compliance_status"] == "SUCCESS"
@@ -159,7 +158,7 @@ def test_validation_summary_conjunction(spark, pair):
         column_mismatch_metrics(src, src, ["id"]),
         nt,
         ordinal_check(schema_store(spark, st, "src"), schema_store(spark, st, "tgt")),
-        type_compatibility(nt, default_compatibility_matrix(spark)),
+        type_compatibility(nt),
     )
     assert ok["validation_status"] == "SUCCESS"
 
