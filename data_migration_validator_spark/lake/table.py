@@ -198,9 +198,6 @@ class LakeTable:
         self.root = root
         self.manifest = manifest
         self._pinned = False  # True on time-travel handles (read-only)
-        # consecutive zero-yield MERGE prune probes on this handle (the
-        # adaptive probe hysteresis; re-armed by compact()/rebucket())
-        self._probe_miss_streak = 0
         self._carry: dict = {}  # see _committing
         # single-writer guard PER HANDLE: concurrent driver threads (the
         # parallel demux fan-out) may share one destination handle — e.g.
@@ -304,7 +301,6 @@ class LakeTable:
         and the table reconverges.
         """
         self._assert_writable()
-        self._probe_miss_streak = 0  # file geometry changes: re-arm probe
         path = os.path.join(self.root, "_manifest", f"v{seq:08d}.json")
         if not os.path.exists(path):
             raise FileNotFoundError(
@@ -351,7 +347,6 @@ class LakeTable:
         self._assert_writable()
         if num_buckets < 1:
             raise ValueError("num_buckets must be >= 1")
-        self._probe_miss_streak = 0  # file geometry changes: re-arm probe
         src = bucket_col or self.bucket_source
         if self.schema.field_by_name(src) is None:
             raise ValueError(f"bucket column {src!r} not in schema")
@@ -924,7 +919,6 @@ class LakeTable:
     def overwrite(self, df: DataFrame) -> None:
         """Full-table replace (CTAS / initial load).  Clears any live
         merge-on-read deltas — they described the replaced state."""
-        self._probe_miss_streak = 0  # file geometry changes: re-arm probe
         entries, bucket_rows = self._write_files(self._conform(df))
         self._write_manifest(
             self._next_manifest(
@@ -936,7 +930,6 @@ class LakeTable:
 
     def append(self, df: DataFrame) -> None:
         """Blind append (reference S11: ``write.mode('append').saveAsTable``)."""
-        self._probe_miss_streak = 0  # new files may be disjoint: re-arm probe
         entries, bucket_rows = self._write_files(self._conform(df))
         m = self._next_manifest()
         m["files"] = m["files"] + entries
@@ -951,12 +944,12 @@ class LakeTable:
         (batches another handle committed show up after :meth:`load`)."""
         return str(batch_id) in self.manifest.get("batches", {})
 
-    # key types the MERGE file-prune probe supports: same-type range
-    # comparisons with no coercion traps (char padding, session-tz
-    # timestamps, NaN floats are excluded on purpose — those buckets just
-    # rewrite whole, which is always correct; decimal is out because Arrow
-    # cannot extract footer stats for Spark's INT64/FLBA-backed decimals,
-    # so decimal keys never have bounds to probe)
+    # key types the MERGE file prune supports: same-type range comparisons
+    # with no coercion traps (char padding, session-tz timestamps, NaN
+    # floats are excluded on purpose — those buckets just rewrite whole,
+    # which is always correct; decimal is out because Arrow cannot extract
+    # footer stats for Spark's INT64/FLBA-backed decimals, so decimal keys
+    # never have bounds to compare)
     _PRUNE_KEY_TYPES = frozenset(
         {"tinyint", "smallint", "int", "bigint", "string", "varchar",
          "date"}
@@ -966,54 +959,34 @@ class LakeTable:
         self,
         changes: DataFrame,
         touched: list[int],
-        key_ranges: dict[int, tuple] | None = None,
-        n_changes: int | None = None,
-        broadcast_max_rows: int = 500_000,
+        key_ranges: dict[int, tuple],
     ) -> tuple[set, list[dict], dict[int, int]] | None:
         """MERGE file pruning (Hudi bloom-index / Iceberg merge-on-read
         file-scoping analog, done with the per-file key min/max stats the
         manifest already carries): decide which BASE files in the touched
-        buckets can possibly contain a change key.  Two tiers:
+        buckets can possibly contain a change key.
 
-        1. FREE range test — ``key_ranges`` maps bucket → (min, max) change
-           key, computed inside the SAME discovery aggregation that finds
-           the touched buckets (zero extra Spark actions); a file whose key
-           interval is disjoint from its bucket's change-key range is clean.
-           This is the tier that carries the classic CDC shape (monotone
-           keys, updates skewed recent → only the newest files intersect).
-        2. Per-key probe — a broadcast hash join of the cached change-set
-           against the files tier 1 left standing (map-side pass + a tiny
-           exchange to distinct the matched path set, bounded by file count).
-           It adds one Spark job per merge, so it runs only when the
-           change-set is small (``n_changes ≤ broadcast_max_rows`` — the
-           same smallness gate the anti-join broadcast uses) or when the
-           table property ``write.merge.prune.probe`` is ``always``
-           (``never`` disables it; default ``auto``).  A big uniform batch
-           intersects almost every file anyway — the probe would be a pure
-           extra job — while a small batch is exactly where per-key bounds
-           beat the bucket-range test.  Auto mode also carries a per-handle
-           hysteresis: after ``write.merge.prune.probe_miss_limit``
-           (default 2) consecutive probes that cleaned nothing beyond
-           tier 1, the handle stops probing until the next non-merge
-           file-geometry commit (append/overwrite/rollback/compact/
-           rebucket/bucket-rewrite) re-arms it — a steady stream pays the
-           probe only for its first batches.  Misses are counted only
-           when tier 1 had usable ranges; when the probe is the ONLY
-           tier (cross-domain change key) it never trips.
+        ``key_ranges`` maps bucket → (min, max) change key, computed inside
+        the SAME discovery aggregation that finds the touched buckets, so
+        the decision costs zero Spark actions: a file whose key interval is
+        disjoint from its bucket's change-key range is clean.  This carries
+        the classic CDC shape (monotone keys, updates skewed recent → only
+        the newest files intersect).
 
         Returns ``(candidate_paths, clean_entries, clean_rows_per_bucket)``
-        or ``None`` when pruning is not applicable (no stats, unsupported
-        key type, property off).  Soundness: a file is "clean" (kept as-is,
-        never read or rewritten) only if its key interval provably excludes
-        EVERY change key.  Conservative fallbacks: a file with missing or
-        undecodable key bounds, a bucket carrying live MOR deltas (their
-        keys are in neither tier), an open upper bound hit, or a bucket
-        with no usable change range when the probe is gated off →
-        candidate.  NULL keys never join-match in MERGE's anti/semi joins,
-        so bounds and ranges that ignore nulls stay sound.  Python string
-        comparison is code-point order == UTF-8 byte order, matching both
-        Spark's string ordering and the parquet-footer bound ordering, so
-        tier 1's driver-side compares agree with the executors'.
+        or ``None`` when no file is clean (no stats, unsupported key type,
+        property off, nothing disjoint).  Soundness: a file is "clean"
+        (kept as-is, never read or rewritten) only if its key interval
+        provably excludes EVERY change key.  Conservative fallbacks: a file
+        with missing or undecodable key bounds, a bucket carrying live MOR
+        deltas (their keys are not in the file stats), a bucket with no
+        usable change range, or a change key column that compares in a
+        different domain from the table key → candidate.  NULL keys never
+        join-match in MERGE's anti/semi joins, so bounds and ranges that
+        ignore nulls stay sound.  Python string comparison is code-point
+        order == UTF-8 byte order, matching both Spark's string ordering
+        and the parquet-footer bound ordering, so the driver-side compares
+        agree with the executors'.
 
         At 10^10-row scale this turns COW write amplification from
         O(touched buckets) into O(files whose key range the batch actually
@@ -1029,128 +1002,62 @@ class LakeTable:
         fld = self.schema.field_by_name(key)
         if fld is None or _base_type(fld.type) not in self._PRUNE_KEY_TYPES:
             return None
-        fid = str(fld.id)
-        tset = set(touched)
-        delta_buckets = {
-            e["bucket"] for e in self.manifest.get("deltas", [])
-            if e["bucket"] in tset
-        }
-        # Tier 1 is sound only when the change-set's key column compares in
-        # the SAME domain the table key does: the per-bucket min/max was
-        # computed under the CHANGES column's native ordering, and e.g. a
-        # string-typed change key gives lexical bounds ("10" < "9") that
-        # _norm would silently cross-coerce into numeric — an inverted
-        # range that could mark a file clean while it holds a change key.
-        # (The tier-2 probe is immune: Spark coerces inside the join.)
+        # The ranges are sound only when the change-set's key column
+        # compares in the SAME domain the table key does: the per-bucket
+        # min/max was computed under the CHANGES column's native ordering,
+        # and e.g. a string-typed change key gives lexical bounds ("10" <
+        # "9") that _norm would silently cross-coerce into numeric — an
+        # inverted range that could mark a file clean while it holds a
+        # change key.
         try:
             ch_type = changes.schema[key].dataType.simpleString()
-        except Exception:
-            ch_type = None
-        if ch_type is None or not same_comparison_domain(ch_type, fld.type):
-            key_ranges = None
-        # normalized per-bucket change-key ranges for the free tier; a
-        # range with a NULL end (all-NULL keys) or a normalization failure
-        # degrades to "no range" for that bucket
+        except KeyError:  # key column named in another letter case
+            return None
+        if not same_comparison_domain(ch_type, fld.type):
+            return None
+        # normalized per-bucket change-key ranges; a range with a NULL end
+        # (all-NULL keys) or a normalization failure degrades to "no range"
+        # for that bucket
         ranges: dict[int, tuple] = {}
-        for b, (c_lo, c_hi) in (key_ranges or {}).items():
+        for b, (c_lo, c_hi) in key_ranges.items():
             if c_lo is None or c_hi is None:
                 continue
             ok_l, nl = _norm(fld.type, c_lo)
             ok_h, nh = _norm(fld.type, c_hi)
             if ok_l and ok_h:
                 ranges[int(b)] = (nl, nh)
+        fid = str(fld.id)
+        tset = set(touched)
+        delta_buckets = {
+            e["bucket"] for e in self.manifest.get("deltas", [])
+            if e["bucket"] in tset
+        }
 
-        probe_mode = self.manifest["properties"].get(
-            "write.merge.prune.probe", "auto"
-        ).lower()
-        # Adaptive hysteresis (auto mode only): a probe that cleans nothing
-        # beyond tier 1 was a pure extra Spark job; after ``miss_limit``
-        # consecutive zero-yield probes this HANDLE stops probing — a
-        # steady CDC stream pays the probe for its first batches, learns
-        # the free tier carries its shape, and drops to zero overhead.
-        # Every non-merge file-geometry commit (append/overwrite/rollback/
-        # compact/rebucket/bucket-rewrite) re-arms it.  0 disables the
-        # hysteresis.
-        try:
-            miss_limit = int(
-                self.manifest["properties"].get(
-                    "write.merge.prune.probe_miss_limit", "2"
-                )
-            )
-        except (TypeError, ValueError):
-            miss_limit = 2  # malformed property degrades, never fails ingest
-        probe_ok = probe_mode == "always" or (
-            probe_mode == "auto"
-            and n_changes is not None
-            and n_changes <= broadcast_max_rows
-            and (miss_limit <= 0 or self._probe_miss_streak < miss_limit)
-        )
-
-        probe_rows, candidates = [], set()
+        candidates: set = set()
         clean: list[dict] = []
-        prunable: dict[str, dict] = {}
         for f in self.manifest["files"]:
             if f["bucket"] not in tset:
                 continue
             st = (f.get("stats") or {}).get(fid)
-            if f["bucket"] in delta_buckets or not st or st[0] is None:
+            rng = ranges.get(int(f["bucket"]))
+            if (
+                f["bucket"] in delta_buckets or rng is None
+                or not st or st[0] is None
+            ):
                 candidates.add(f["path"])
                 continue
             lo_ok, lo = _norm(fld.type, st[0])
             hi_ok, hi = (True, None) if st[1] is None else _norm(fld.type, st[1])
             rows = st[3] if len(st) > 3 else None
-            if not lo_ok or not hi_ok or rows is None:
-                candidates.add(f["path"])
-                continue
-            rng = ranges.get(int(f["bucket"]))
-            if rng is not None and (
-                (hi is not None and hi < rng[0]) or lo > rng[1]
+            if (
+                lo_ok and hi_ok and rows is not None
+                and ((hi is not None and hi < rng[0]) or lo > rng[1])
             ):
-                clean.append(f)  # tier 1: disjoint from the change range
-                continue
-            if not probe_ok:
+                clean.append(f)  # disjoint from the change range
+            else:
                 candidates.add(f["path"])
-                continue
-            probe_rows.append((f["path"], int(f["bucket"]), lo, hi, hi is None))
-            prunable[f["path"]] = f
-        if not probe_rows:
-            # no probe needed/allowed: tier-1 verdicts only
-            if not candidates and not clean:
-                return None
-        else:
-            kt = "string" if _base_type(fld.type) == "varchar" else fld.type
-            files_df = local_frame(
-                self.spark,
-                probe_rows,
-                f"__path string, __fb int, __lo {kt}, __hi {kt}, __open boolean",
-            )
-            hits = (
-                changes.select(F.col(key).alias("__k"), F.col("__bucket"))
-                .join(
-                    F.broadcast(files_df),
-                    (F.col("__bucket") == F.col("__fb"))
-                    & (F.col("__k") >= F.col("__lo"))
-                    & (F.col("__open") | (F.col("__k") <= F.col("__hi"))),
-                    "inner",
-                )
-                .select("__path")
-                .distinct()
-                .collect()
-            )
-            candidates.update(r["__path"] for r in hits)
-            probe_cleans = [
-                f for p, f in prunable.items() if p not in candidates
-            ]
-            if ranges:
-                # a zero-yield probe only counts as a miss when tier 1 had
-                # information ("the free tier carries this shape"); with no
-                # usable ranges (cross-domain key, legacy bucket_stats) the
-                # probe is the ONLY tier — tripping the hysteresis there
-                # would permanently disable all pruning for the handle
-                self._probe_miss_streak = (
-                    0 if probe_cleans else self._probe_miss_streak + 1
-                )
-            clean.extend(probe_cleans)
+        if not clean:
+            return None
         clean_rows: dict[int, int] = {}
         for f in clean:
             b = int(f["bucket"])
@@ -1212,13 +1119,15 @@ class LakeTable:
         ``rows_delete_requested`` is reported.
 
         ``bucket_stats``: optional precomputed per-bucket
-        ``{__bucket, n_up, n_del}`` rows (e.g. from ``cdc.apply_batch``'s
-        fused per-batch stats job).  When given, the discovery aggregation
-        is skipped.  The write is then this call's only Spark action except
-        for the MERGE file-prune probe (one tiny broadcast-join job per COW
-        merge when the touched buckets carry key stats); set
-        ``write.merge.prune_files=false`` on the table to restore the
-        strict one-action path.
+        ``{__bucket, n_up, n_del, k_lo, k_hi}`` rows (e.g. from
+        ``cdc.apply_batch``'s fused per-batch stats job).  When given, the
+        discovery aggregation is skipped and the write is this call's only
+        Spark action (the file prune reads only the manifest).  Counted per
+        call, a clean COW merge of a 2,000-row batch into a 4-bucket table
+        runs 11 Spark jobs without ``bucket_stats`` (8 with
+        ``count_deletes=False``): AQE splits the discovery aggregate, the
+        exact-delete count and the write into several jobs each.  Held by
+        ``tests/test_job_budget.py::test_cow_merge_job_budget``.
         """
         with self._write_lock:
             return self._merge_locked(
@@ -1277,34 +1186,24 @@ class LakeTable:
             touched = [int(r["__bucket"]) for r in bucket_stats]
             rows_upserted = int(sum(r["n_up"] for r in bucket_stats))
             deletes_requested = int(sum(r["n_del"] for r in bucket_stats))
-            key_ranges: dict[int, tuple] = {}
-            for r in bucket_stats:
-                try:  # caller-supplied stats may predate the range fields
-                    key_ranges[int(r["__bucket"])] = (r["k_lo"], r["k_hi"])
-                except (KeyError, ValueError, IndexError):
-                    key_ranges = {}
-                    break
+            key_ranges = {
+                int(r["__bucket"]): (r["k_lo"], r["k_hi"]) for r in bucket_stats
+            }
 
             # A touched bucket "has rows" if it has BASE FILES or live MOR
             # DELTAS — a mor-ingested, not-yet-compacted bucket has an empty
             # files list but a non-empty read; skipping the anti-join for it
             # would keep stale row versions alongside the upserts and ignore
             # deletes.
-            tset_probe = set(touched)
+            touched_set = set(touched)
             touched_has_files = any(
-                f["bucket"] in tset_probe
+                f["bucket"] in touched_set
                 for f in self.manifest["files"] + self.manifest.get("deltas", [])
             )
             clean_entries: list[dict] = []
             clean_rows: dict[int, int] = {}
             prune = (
-                self._merge_candidate_files(
-                    changes,
-                    touched,
-                    key_ranges=key_ranges,
-                    n_changes=rows_upserted + deletes_requested,
-                    broadcast_max_rows=broadcast_max_rows,
-                )
+                self._merge_candidate_files(changes, touched, key_ranges)
                 if touched_has_files
                 else None
             )
@@ -1339,7 +1238,7 @@ class LakeTable:
                 survivors = existing
 
             rows_deleted = 0
-            if count_deletes:
+            if count_deletes and deletes_requested:
                 # exact deletes = delete keys actually present (file-pruned
                 # scan of touched buckets only; change side is cached).
                 deletes = changes.filter(F.col(op_col) == delete_value).select(*keys)
@@ -1353,7 +1252,6 @@ class LakeTable:
         finally:
             changes.unpersist()
 
-        touched_set = set(touched)
         n_touched_files = sum(
             1 for f in self.manifest["files"] if f["bucket"] in touched_set
         )
@@ -1588,7 +1486,6 @@ class LakeTable:
         maintenance; run it on a schedule or when :meth:`delta_detail`'s
         bytes cross a threshold — ingest never blocks on it.
         """
-        self._probe_miss_streak = 0  # file geometry changes: re-arm probe
         deltas = self.manifest.get("deltas", [])
         scope = set(buckets) if buckets is not None else None
         target = sorted(
@@ -1788,7 +1685,6 @@ class LakeTable:
         rewrite came from a MOR-resolved :meth:`read`, so the buckets'
         deltas are folded in and must leave the manifest with the old files
         — keeping them would re-apply them on top of the rewrite."""
-        self._probe_miss_streak = 0  # file geometry changes: re-arm probe
         kept = [f for f in self.manifest["files"] if f["bucket"] not in touched]
         kept_deltas = [
             e for e in self.manifest.get("deltas", []) if e["bucket"] not in touched

@@ -491,65 +491,54 @@ def connected_components(
     Rounds needed = the longest min-label path — near-dup clusters are
     shallow (pairs share content, so clusters are quasi-cliques), so this
     converges in 2-3 rounds in practice; ``max_iter`` bounds the
-    pathological chain.  The convergence check rides the SAME aggregate
-    that computes the round (one action per round, the loop is
-    driver-side but O(rounds), not O(V)).  For graphs with genuinely deep
-    components at 10^10 edges, swap in large-star/small-star (alternating
-    conditional stars, O(log n) rounds) — same join shapes.
+    pathological chain.  Each round materializes its labels once and
+    counts its changes over them (two actions per round; the loop is
+    driver-side but O(rounds), not O(V)), and the plan stays one round
+    deep.  For graphs with genuinely deep components at 10^10 edges, swap
+    in large-star/small-star (alternating conditional stars, O(log n)
+    rounds) — same join shapes.
     """
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    # localCheckpoint (not persist) on entry and every round: it cuts the
+    # lineage, so each round plans against a fixed-size leaf instead of
+    # the whole chain of earlier rounds — a persisted frame still carries
+    # its full logical plan, which grows every round until printing it
+    # exhausts the driver heap.
     edges = fwd.union(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    ).localCheckpoint(eager=True)
     labels = edges.select("src").distinct().select(
         F.col("src").alias("v"), F.col("src").alias("label")
-    ).persist()
-    cached = labels  # the persisted frame backing the current labels
-    try:
-        for _ in range(max_iter):
-            neigh = (
-                edges.join(labels, edges["dst"] == labels["v"])
-                .groupBy(F.col("src").alias("v"))
-                .agg(F.min("label").alias("nmin"))
+    )
+    for _ in range(max_iter):
+        neigh = (
+            edges.join(labels, edges["dst"] == labels["v"])
+            .groupBy(F.col("src").alias("v"))
+            .agg(F.min("label").alias("nmin"))
+        )
+        stepped = (
+            labels.join(neigh, on="v", how="left")
+            .select(
+                "v",
+                F.least(F.col("label"), F.col("nmin")).alias("label"),
+                (F.col("nmin") < F.col("label")).cast("int").alias("__chg"),
             )
-            stepped = (
-                labels.join(neigh, on="v", how="left")
-                .select(
-                    "v",
-                    F.least(F.col("label"), F.col("nmin")).alias("label"),
-                    (F.col("nmin") < F.col("label")).cast("int").alias("__chg"),
-                )
-                .persist()
-            )
-            # this count is the round's ONE action; it also materializes
-            # the cache the next round (and the final read) reuses, so the
-            # plan never chains deeper than one round
-            changed = int(
-                stepped.agg(F.sum("__chg")).collect()[0][0] or 0
-            )
-            cached.unpersist()
-            cached = stepped
-            labels = stepped.select("v", "label")
-            if changed == 0:
-                break
-        else:
-            # exhausted max_iter while still changing: returning here would
-            # silently split one component into several cluster_ids
-            cached.unpersist()
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds "
-                "(a component's min-label path is longer); raise max_iter"
-            )
-        # Materialize the result once (localCheckpoint cuts the iterative
-        # lineage AND lets the loop's last cache be freed), so callers hold
-        # a self-contained frame instead of a pin on this function's cache.
-        out = labels.select(
-            F.col("v").alias("vertex"), F.col("label").alias("cluster_id")
-        ).localCheckpoint(eager=True)
-        cached.unpersist()
-        return out
-    finally:
-        edges.unpersist()
+            .localCheckpoint(eager=True)
+        )
+        changed = int(stepped.agg(F.sum("__chg")).collect()[0][0] or 0)
+        labels = stepped.select("v", "label")
+        if changed == 0:
+            break
+    else:
+        # exhausted max_iter while still changing: returning here would
+        # silently split one component into several cluster_ids
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            "(a component's min-label path is longer); raise max_iter"
+        )
+    return labels.select(
+        F.col("v").alias("vertex"), F.col("label").alias("cluster_id")
+    )
 
 
 # --------------------------------------------------------------------------- #

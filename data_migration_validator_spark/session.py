@@ -103,6 +103,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # cap every printed plan (explain, AQE plan-change logs, error
+        # messages): an iterative job whose plan does grow then truncates
+        # its string instead of building it whole on the driver heap
+        .config("spark.sql.maxPlanStringLength", "1m")
         # 8g, not bigger: the sandbox hypervisor overcommits memory and a
         # process whose resident set grows past ~20 GB triggers ballooning
         # that throttles the whole VM 4-5x (measured — see

@@ -25,6 +25,17 @@ SCHEMA = [("k", "bigint"), ("g", "string"), ("v", "bigint")]
 # map job + one write job under AQE)
 MOR_MERGE_JOBS = 2
 
+# jobs a clean copy-on-write merge() of _changes into _table runs once the
+# MERGE file prune is the range tier alone (its 2nd and 3rd merges ran 14
+# while the per-key probe still ran, and 11 once its hysteresis had turned
+# it off)
+COW_MERGE_JOBS = 11
+
+# jobs the third scd2_apply batch of test_scd2_apply_job_budget's stream
+# runs once the per-key probe is gone and the exact-delete count is skipped
+# on a change-set with no deletes (19 with both)
+SCD2_APPLY_JOBS = 13
+
 # jobs one run_validation of _validation_pair ran once the schema checks
 # moved onto the driver (20 when they ran as Spark joins)
 RUN_VALIDATION_JOBS = 9
@@ -78,6 +89,51 @@ def test_mor_merge_and_has_batch_job_budget(spark, tmp_root):
     assert st["skipped"] and n == 0
 
 
+def test_cow_merge_job_budget(spark, tmp_root):
+    """A copy-on-write merge with no bucket_stats: its file prune reads only
+    the manifest, so a table's early merges run as many jobs as its later
+    ones."""
+    t = _table(spark, tmp_root)
+    t.merge(_changes(spark, 0, 2000), batch_id=0)
+    counts = []
+    for i in (1, 2, 3):
+        st, n = _jobs(spark, lambda: t.merge(
+            _changes(spark, i * 500, 2000), batch_id=i
+        ))
+        assert not st["skipped"] and st["rows_deleted"] == 0
+        counts.append(n)
+    assert counts[0] == counts[1] == counts[2], counts
+    assert counts[2] <= COW_MERGE_JOBS, f"clean COW merge ran {counts[2]} jobs"
+
+
+def test_scd2_apply_job_budget(spark, tmp_root):
+    from data_migration_validator_spark.cdc import change_events
+    from data_migration_validator_spark.cdc.scd import (
+        make_scd2_table,
+        scd2_apply,
+    )
+
+    ev = change_events(
+        spark, n_events=4000, n_repos=20, paths_per_repo=10, seed=7,
+        batch_size=1000,
+    ).persist()
+    try:
+        t = make_scd2_table(
+            spark, os.path.join(tmp_root, "h"), ["repo", "path"],
+            [("commit", "string"), ("lang", "string"), ("content", "string")],
+            num_buckets=8,
+        )
+        for b in (0, 1):
+            scd2_apply(t, ev.filter(F.col("batch_hint") == b), batch_id=b)
+        st, n = _jobs(spark, lambda: scd2_apply(
+            t, ev.filter(F.col("batch_hint") == 2), batch_id=2
+        ))
+        assert not st["skipped"] and st["versions_opened"] > 0
+        assert n <= SCD2_APPLY_JOBS, f"scd2_apply batch ran {n} jobs"
+    finally:
+        ev.unpersist()
+
+
 def test_commit_staged_deltas_runs_no_job(spark, tmp_root):
     t = _table(spark, tmp_root)
     stage = os.path.join(tmp_root, "stage")
@@ -101,9 +157,8 @@ def test_commit_staged_deltas_runs_no_job(spark, tmp_root):
 
 def test_driver_side_frames_run_no_python_worker(spark, tmp_root):
     """Small frames built on the driver (schema checks on every
-    run_validation, the MERGE prune probe, the empty-table read) go
-    through the Arrow path: no PythonRDD in their lineage."""
-    from data_migration_validator_spark.session import local_frame
+    run_validation, the empty-table read) go through the Arrow path: no
+    PythonRDD in their lineage."""
 
     def lineage(df):
         return df._jdf.queryExecution().toRdd().toDebugString()
@@ -113,15 +168,10 @@ def test_driver_side_frames_run_no_python_worker(spark, tmp_root):
     frames = {
         "schema_store": schema_store(spark, t.read().schema, "src"),
         **schema_frames,
-        "prune_probe": local_frame(
-            spark, [("data/f.parquet", 1, 3, None, True)],
-            "__path string, __fb int, __lo bigint, __hi bigint, __open boolean",
-        ),
         "empty_read": t.read(),
     }
     for name, df in frames.items():
         assert "PythonRDD" not in lineage(df), name
-    assert frames["prune_probe"].collect()[0]["__hi"] is None
     assert frames["schema_store"].count() == len(SCHEMA)
 
 

@@ -1,5 +1,11 @@
 """MERGE file pruning (LakeTable._merge_candidate_files): COW merges skip
 base files whose per-file key min/max provably exclude every change key.
+There is one tier, and it runs no Spark job: the per-bucket change-key
+min/max rides the merge's discovery aggregation (or the caller's
+bucket_stats), and a file whose key interval is disjoint from its bucket's
+range is kept.  A change key that compares in another domain than the
+table key, a bucket with live merge-on-read deltas, and a file without
+key stats all fall back to rewriting the file.
 
 Scale rationale: at 10^10 rows a bucket holds many files (one per historical
 append/compaction), but a CDC batch's keys usually intersect a few of them —
@@ -120,7 +126,7 @@ def test_row_accounting_after_pruned_merge(spark, tmp_root):
 
 def test_delta_buckets_are_not_pruned(spark, tmp_root):
     """A bucket carrying live MOR deltas must rewrite whole (delta keys are
-    not in the probe): result still equals the unpruned clone."""
+    not in the file stats): result still equals the unpruned clone."""
     t_on = _build(spark, tmp_root, "on")
     t_off = _build(
         spark, tmp_root, "off", properties={"write.merge.prune_files": "false"}
@@ -238,14 +244,10 @@ def test_decimal_column_stats_degrade_not_crash(spark, tmp_root):
     assert t.read().count() == 210
 
 
-def test_tier1_range_prune_with_probe_never(spark, tmp_root):
-    """probe=never: the free per-bucket range tier alone must keep the
-    disjoint files (no probe job exists to help), result-equal to the
-    unpruned clone."""
-    t_on = _build(
-        spark, tmp_root, "on",
-        properties={"write.merge.prune.probe": "never"},
-    )
+def test_tier1_range_prune(spark, tmp_root):
+    """The free per-bucket range tier must keep the disjoint files,
+    result-equal to the unpruned clone."""
+    t_on = _build(spark, tmp_root, "on")
     t_off = _build(
         spark, tmp_root, "off",
         properties={"write.merge.prune_files": "false"},
@@ -258,62 +260,12 @@ def test_tier1_range_prune_with_probe_never(spark, tmp_root):
     assert sum(t_on.manifest["bucket_rows"].values()) == 4000 - 10 + 10
 
 
-def test_probe_auto_gates_off_for_large_batches(spark, tmp_root):
-    """auto mode with broadcast_max_rows=0 simulates a huge batch: the
-    per-key probe must NOT run.  The fixture pins two change keys to the
-    SAME bucket, one inside append 1's range and one inside append 4's, so
-    that bucket's tier-1 change range spans all four files — tier 1 alone
-    clears nothing, the probe clears the two middle appends.  A gated run
-    must therefore keep exactly what probe=never keeps and STRICTLY fewer
-    files than the probe-on run (this is what makes a gate regression —
-    the probe wrongly running — detectable)."""
-    bk = {
-        r["id"]: r["b"]
-        for r in spark.range(0, 4000)
-        .select(
-            "id",
-            F.pmod(F.xxhash64(F.col("id")), F.lit(N_BUCKETS)).cast("int").alias("b"),
-        )
-        .collect()
-    }
-    k1 = 5
-    k2 = next(i for i in range(3000, 4000) if bk[i] == bk[k1])
-
-    def mk_change():
-        return spark.createDataFrame([(k1,), (k2,)], "id bigint").select(
-            F.col("id"),
-            F.concat(F.lit("upd"), F.col("id")).alias("val"),
-            F.lit(1).cast("int").alias("ver"),
-            F.lit("upsert").alias("op"),
-        )
-
-    t_gate = _build(spark, tmp_root, "gate")
-    t_never = _build(
-        spark, tmp_root, "never",
-        properties={"write.merge.prune.probe": "never"},
-    )
-    t_probe = _build(spark, tmp_root, "probe")
-    s_gate = t_gate.merge(mk_change(), broadcast_max_rows=0)
-    s_never = t_never.merge(mk_change())
-    s_probe = t_probe.merge(mk_change())
-
-    assert s_probe["files_kept"] > s_gate["files_kept"]
-    assert s_gate["files_kept"] == s_never["files_kept"]
-    assert (
-        _sorted_rows(t_gate) == _sorted_rows(t_never) == _sorted_rows(t_probe)
-    )
-    got = {r["id"]: r["val"] for r in t_gate.read().filter(
-        f"id in ({k1}, {k2})").collect()}
-    assert got == {k1: f"upd{k1}", k2: f"upd{k2}"}
-    assert t_gate.read().count() == 4000
-
-
 def test_string_typed_change_key_disables_tier1(spark, tmp_root):
     """A change-set whose key column arrives string-typed compares in
     LEXICAL order ('10' < '9'), so its per-bucket min/max is meaningless
     in the table key's numeric domain — tier 1 must be disabled (the
-    cross-domain guard), the probe (immune: Spark coerces inside the
-    join) still prunes, and the result equals the unpruned clone."""
+    cross-domain guard): the touched buckets rewrite whole, and the result
+    equals the unpruned clone."""
     def mk(name, props=None):
         p = {"write.sort.cols": "id"}
         p.update(props or {})
@@ -352,82 +304,5 @@ def test_string_typed_change_key_disables_tier1(spark, tmp_root):
     got = {r["id"]: r["v"] for r in t_on.read().filter("id in (9, 10)").collect()}
     assert got == {9: 1, 10: 1}
     assert t_on.read().count() == 300
-    # the probe still prunes the file whose range excludes both keys
-    assert s_on["files_kept"] > 0
-
-
-def test_probe_hysteresis_disables_zero_yield_probes(spark, tmp_root):
-    """Two consecutive probes that clean nothing beyond tier 1 must stop
-    the handle from probing (streak freezes — no further updates), and
-    compact() re-arms it."""
-    t = _build(spark, tmp_root, "t", n_appends=1)  # 1 file/bucket: tier 1
-    assert t._probe_miss_streak == 0               # and probe see the same
-    # wide same-bucket batches -> tier 1 clears nothing, probe also clears
-    # nothing (every file range contains change keys): zero-yield probes
-    for i in range(3):
-        ch = _rows(spark, 0, 1000, ver=i + 1, val="u").withColumn(
-            "op", F.lit("upsert")
-        )
-        t.merge(ch, broadcast_changes=True)
-        # streak counts the first two probes, then the gate skips the
-        # probe entirely so the streak freezes at the limit
-        assert t._probe_miss_streak == min(i + 1, 2)
-    # maintenance changes the file geometry -> probe re-armed
-    t.merge(
-        _rows(spark, 0, 10, ver=9).withColumn("op", F.lit("upsert")),
-        mode="mor",
-    )
-    t.compact()
-    assert t._probe_miss_streak == 0
-    assert t.read().count() == 1000
-
-
-def test_hysteresis_never_trips_when_probe_is_only_tier(spark, tmp_root):
-    """Cross-domain change keys disable tier 1, so zero-yield probes carry
-    no 'shape learned' signal — the streak must NOT advance, and a later
-    sparse batch still gets probe pruning.  (The bucket column is separate
-    and correctly typed — a string-typed key on a key-bucketed table would
-    hash wrong buckets and is not a valid merge input.)"""
-    t = LakeTable.create(
-        spark, os.path.join(tmp_root, "t"),
-        [("id", "bigint"), ("grp", "string"), ("v", "int")],
-        key_cols=["id"], bucket_col="grp", num_buckets=4,
-        properties={"write.sort.cols": "id"},
-    )
-
-    def h(s):
-        return spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(s)), F.lit(4)).cast("int")
-        ).first()[0]
-
-    ga = "gA"
-    gb = next(g for g in ("gB", "gC", "gD", "gE") if h(g) != h(ga))
-    grp_of = F.when(F.col("id") < 150, F.lit(ga)).otherwise(F.lit(gb))
-    for i in range(3):
-        t.append(
-            spark.range(i * 100, (i + 1) * 100).select(
-                F.col("id"), grp_of.alias("grp"), F.lit(0).cast("int").alias("v")
-            )
-        )
-
-    def str_keyed(lo, hi):
-        return spark.range(lo, hi).select(
-            F.col("id").cast("string").alias("id"),
-            F.when(F.col("id") < 150, F.lit(ga)).otherwise(F.lit(gb)).alias("grp"),
-            F.lit(1).cast("int").alias("v"),
-            F.lit("upsert").alias("op"),
-        )
-
-    # two wide string-keyed batches confined to ga's bucket: probe runs,
-    # cleans nothing, but the streak must stay 0 (tier 1 had no ranges to
-    # learn from — WITHOUT the guard it would hit the miss limit here and
-    # the later sparse probe below would be skipped)
-    for _ in range(2):
-        t.merge(str_keyed(0, 150), broadcast_changes=True)
-        assert t._probe_miss_streak == 0
-    # sparse batch on gb's UNTOUCHED bucket (3 intact files: id ranges
-    # [150,200) and [200,300)): keys {160,161} exclude the [200,300) file,
-    # so the probe — still armed — must keep it
-    st = t.merge(str_keyed(160, 162), broadcast_changes=True)
-    assert st["files_kept"] > 0
-    assert t.read().count() == 300
+    # no file is kept on an unsound range
+    assert s_on["files_kept"] == 0

@@ -381,6 +381,33 @@ def test_connected_components_chain_and_clique(spark):
     }
 
 
+def test_connected_components_long_path_plan_stays_bounded(spark):
+    """A 16-vertex path needs 15 label rounds: it must converge to one
+    cluster, and the returned frame's plan must be no bigger than a
+    3-vertex path's (each round starts from a checkpoint, so no round's
+    plan carries the rounds before it)."""
+    from data_migration_validator_spark.operators.dedup import (
+        connected_components,
+    )
+
+    def path(n):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
+        )
+
+    def plan_nodes(df):
+        return len(
+            df._jdf.queryExecution().analyzed().treeString().splitlines()
+        )
+
+    short = connected_components(path(3))
+    long_ = connected_components(path(16), max_iter=50)
+    got = long_.collect()
+    assert len(got) == 16
+    assert {r["cluster_id"] for r in got} == {1}
+    assert plan_nodes(long_) <= plan_nodes(short)
+
+
 def test_repetition_metrics(spark):
     """Gopher-style n-gram repetition: hand-computed bigram/token counts,
     null/empty/short docs absent, normalization (case + whitespace runs)."""
