@@ -5,11 +5,13 @@ range predicates on timestamps, sizes, status columns — still had to scan
 every live file.  This module closes that gap the way Iceberg/Delta do:
 
 - **Collection** (:func:`collect_entry_stats`): after a commit's files land,
-  read each parquet FOOTER (metadata only — KBs per file, no data pages)
-  and record per-column ``min`` / ``max`` / ``null_count`` / ``rows`` on the
-  manifest file entry, keyed by immutable FIELD ID so renames don't orphan
-  the stats and old files stay prunable under the current schema.  Cost is
-  O(files written this commit), never O(table).
+  the driver reads each new parquet FOOTER once (metadata only — KBs per
+  file, no data pages) and records per-column ``min`` / ``max`` /
+  ``null_count`` / ``rows`` on the manifest file entry, keyed by immutable
+  FIELD ID so renames don't orphan the stats and old files stay prunable
+  under the current schema.  The same footers give the commit its
+  per-bucket row counts.  Cost is O(files written this commit), never
+  O(table).
 - **Pruning** (:func:`prune_entries`): a scan predicate is parsed with
   Spark's own SQL parser (same walk as the bucket pruner); every TOP-LEVEL
   conjunct of a supported shape (``col op literal``, ``literal op col``,
@@ -47,10 +49,8 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
-import sys
+import os
 from decimal import Decimal, InvalidOperation
-
-from pyspark import cloudpickle
 
 _STR_BOUND_MAX = 4000  # treat longer string bounds as open (truncation guard)
 _STR_STORE_MAX = 64  # stored string bounds are truncated to this many chars
@@ -151,18 +151,10 @@ def _trunc_hi(s: str) -> str | None:
     return None
 
 
-def _file_stats(path: str, want: dict[str, tuple[int, str]]) -> dict | None:
+def _file_stats(md, want: dict[str, tuple[int, str]]) -> dict | None:
     """One file's ``{field_id: [min, max, nulls, rows]}`` from its parquet
-    footer (metadata pages only).  Runs INSIDE an executor task — the
-    driver never opens a footer (the commit path's serial term stays O(1)).
-    Any failure degrades to "no stats" for that file/column, never an
-    error."""
-    try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(path).metadata
-    except Exception:
-        return None
+    footer metadata ``md``.  A column whose stats cannot be decoded
+    degrades to "no stats" for that column, never an error."""
     names = [md.schema.column(j).name for j in range(md.num_columns)]
     stats: dict[str, list] = {}
     for name, (fid, type_str) in want.items():
@@ -197,7 +189,7 @@ def _file_stats(path: str, want: dict[str, tuple[int, str]]) -> dict | None:
                 # Arrow raises (not returns None) for types it cannot
                 # decode stats for — e.g. ArrowNotImplementedError on
                 # INT64-backed decimals. Degrade to "no stats", never fail
-                # the commit task.
+                # the commit.
                 mn, mx = _enc(st.min), _enc(st.max)
             except Exception:
                 ok = False
@@ -231,50 +223,33 @@ def _file_stats(path: str, want: dict[str, tuple[int, str]]) -> dict | None:
 
 
 def collect_entry_stats(
-    spark, root: str, entries: list[dict], schema, stat_cols: list[str]
-) -> None:
-    """Attach ``entry["stats"] = {field_id: [min, max, nulls, rows]}`` to
-    each new manifest file entry.  Field ids come from ``schema`` (the
-    writer schema of these files).
+    root: str, entries: list[dict], schema, stat_cols: list[str]
+) -> dict[int, int]:
+    """Read each new manifest file entry's footer on the driver, attach
+    ``entry["stats"] = {field_id: [min, max, nulls, rows]}`` and return the
+    per-bucket row counts ``{bucket: rows}``.  Field ids come from
+    ``schema`` (the writer schema of these files).
 
-    The footers are opened by ONE small executor-side job over the file
-    list (Iceberg collects the same stats in the writer task): the driver
-    does no per-file I/O, so commit latency stays flat as a commit's file
-    count grows, and the collected rows shipped back are bytes per file.
-    The job's functions are pickled BY VALUE (this module is registered
-    with cloudpickle below), so the executors need only pyarrow — not
-    this package on their import path."""
-    import os
+    One footer read per file this commit wrote (~0.1 ms of metadata I/O
+    each), and nothing older.  A footer that cannot be read raises, so the
+    commit fails before its manifest is linked."""
+    import pyarrow.parquet as pq
 
     want: dict[str, tuple[int, str]] = {}
     for c in stat_cols:
         fld = schema.field_by_name(c)
         if fld is not None and statable(fld.type):
             want[c] = (fld.id, fld.type)
-    if not want:
-        return
-    rels = [e["path"] for e in entries]
-    sc = spark.sparkContext
-    # a footer read is ~1ms of metadata I/O: batch ~64 files per task so a
-    # small commit costs one task, while a 10k-file commit still fans out
-    n_slices = max(1, min((len(rels) + 63) // 64, sc.defaultParallelism))
-
-    def _part(it):
-        for rel in it:
-            st = _file_stats(os.path.join(root, rel), want)
-            if st:
-                yield rel, st
-
-    by_rel = dict(sc.parallelize(rels, n_slices).mapPartitions(_part).collect())
+    bucket_rows: dict[int, int] = {}
     for e in entries:
-        st = by_rel.get(e["path"])
+        with pq.ParquetFile(os.path.join(root, e["path"])) as pf:
+            md = pf.metadata
+        b = e["bucket"]
+        bucket_rows[b] = bucket_rows.get(b, 0) + md.num_rows
+        st = _file_stats(md, want)
         if st:
             e["stats"] = st
-
-
-# the footer job ships _file_stats and its helpers to Python workers that
-# may not have this package importable: send the code, not a module ref
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    return bucket_rows
 
 
 # --------------------------------------------------------------------- #

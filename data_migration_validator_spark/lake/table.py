@@ -30,8 +30,9 @@ needed subset itself, Spark-first:
   files stay live and are projected to the current schema at read time by
   field id (rename-safe) with casts (widen) and null fill (add).
 
-Driver-side metadata ops (footer row counts, file listing) are O(#files) and
-would be a manifest/stats service at 100 TB; the data plane is pure Spark.
+Driver-side metadata ops (the footers a commit wrote, file listing) are
+O(#files) and would be a manifest/stats service at 100 TB; the data plane is
+pure Spark.
 """
 
 from __future__ import annotations
@@ -48,6 +49,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..session import local_frame
 from .schema import TableSchema
@@ -164,6 +166,23 @@ def _fs(op, *args):
     return op(*args)
 
 
+def _chars_as_string(dt: T.DataType) -> T.DataType:
+    """``dt`` with every char/varchar, nested ones too, as string."""
+    if isinstance(dt, (T.CharType, T.VarcharType)):
+        return T.StringType()
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _chars_as_string(f.dataType)) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_chars_as_string(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _chars_as_string(dt.keyType), _chars_as_string(dt.valueType)
+        )
+    return dt
+
+
 def _dump_json(path: str, obj: dict) -> None:
     with open(path, "w") as f:
         json.dump(obj, f, indent=1)
@@ -185,7 +204,7 @@ def _seed_bucket_rows(m: dict) -> dict[str, int]:
 
 
 def _manifest_rows(m: dict) -> int:
-    """Live row count of one manifest: per-bucket observed counts, with a
+    """Live row count of one manifest: per-bucket recorded counts, with a
     per-file fallback for manifests written before bucket_rows existed."""
     return sum(_seed_bucket_rows(m).values())
 
@@ -352,8 +371,8 @@ class LakeTable:
             raise ValueError(f"bucket column {src!r} not in schema")
         current = self.read()
         old_partition = self.manifest["partition"]
-        # the in-memory spec drives _write_files' bucket expr + observe
-        # aggregates; restored on failure so the handle never lies
+        # the in-memory spec drives _write_files' bucket expr; restored on
+        # failure so the handle never lies
         self.manifest["partition"] = {"num_buckets": num_buckets, "source": src}
         try:
             entries, bucket_rows = self._write_files(current)
@@ -611,9 +630,21 @@ class LakeTable:
 
         parts: list[DataFrame] = []
         for sid, paths in by_schema.items():
-            raw = self.spark.read.parquet(*paths)
+            raw = self.spark.read.schema(self._file_schema(sid)).parquet(*paths)
             parts.append(raw.select(*self._projection_to(cur, sid, raw.columns)))
         return reduce(lambda a, b: a.unionByName(b), parts)
+
+    def _file_schema(self, schema_id: str, *extra: str) -> T.StructType:
+        """Reader schema of the files written under ``schema_id`` (plus the
+        string columns ``extra``, e.g. a delta's ``__op``): given to the
+        reader, it spares every read Spark's schema-inference job.
+        char/varchar read as string, since Spark rejects them in a reader
+        schema; the field-id projection casts them back."""
+        written = TableSchema.from_json(self.manifest["schemas"][schema_id])
+        struct = _chars_as_string(written.to_struct_type())
+        for c in extra:
+            struct.add(c, T.StringType())
+        return struct
 
     def _projection_to(
         self, cur: TableSchema, schema_id: str, available: list[str]
@@ -645,7 +676,7 @@ class LakeTable:
             base.select("*", F.lit("u").alias("__op"), F.lit(0).alias("__dseq"))
         ]
         for (sid, seq), paths in groups.items():
-            raw = self.spark.read.parquet(*paths)
+            raw = self.spark.read.schema(self._file_schema(sid, "__op")).parquet(*paths)
             proj = self._projection_to(cur, sid, raw.columns)
             parts.append(
                 raw.select(*proj, F.col("__op"), F.lit(seq).alias("__dseq"))
@@ -728,22 +759,16 @@ class LakeTable:
         the rewrite is small; at scale, raise shuffle partitions so hot
         buckets split across multiple files (maxRecordsPerFile).
 
-        Row counts ride the write action itself via ``observe`` (one
-        conditional-count aggregate per bucket) — no post-write footer
-        reads, no extra job, no driver O(#files) stall per commit.  File
-        byte sizes come from driver inode stats (cheap metadata; a real
-        object store surfaces them from the write committer).
+        Per-file stats and per-bucket row counts come from the new files'
+        footers, read once each on the driver after the write
+        (:func:`.stats.collect_entry_stats`): no extra Spark job, and
+        O(files written this commit), never O(table).  File byte sizes come
+        from driver inode stats (cheap metadata; a real object store
+        surfaces them from the write committer).
         """
-        from pyspark.sql import Observation
-
         self._assert_writable()  # before any data file lands (no orphans)
         snap_dir = f"data/snap-{self.manifest['seq'] + 1:08d}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.root, snap_dir)
-        obs = Observation(f"rows-{snap_dir}")
-        bucket_aggs = [
-            F.sum(F.when(F.col("__bucket") == b, 1).otherwise(0)).alias(f"b{b}")
-            for b in range(self.num_buckets)
-        ]
         shaped = (
             df  # pre-partitioned caller: __bucket present, exchange done
             if pre_partitioned
@@ -759,21 +784,11 @@ class LakeTable:
             shaped = shaped.sortWithinPartitions("__bucket", *sort_cols)
         with _pin_micros_timestamps(self.spark):
             (
-                shaped.observe(obs, *bucket_aggs)
-                .write.option("maxRecordsPerFile", 5_000_000)
+                shaped.write.option("maxRecordsPerFile", 5_000_000)
                 .partitionBy("__bucket")
                 .mode("overwrite")
                 .parquet(out)
             )
-        try:
-            observed = dict(obs.get)
-        except Exception:  # zero-task write (empty frame): no metrics row
-            observed = {}
-        bucket_rows = {
-            b: int(observed[f"b{b}"])
-            for b in range(self.num_buckets)
-            if observed.get(f"b{b}")
-        }
         entries = []
         for p in glob.glob(os.path.join(out, "__bucket=*", "*.parquet")):
             bucket = int(p.split("__bucket=")[1].split(os.sep)[0])
@@ -786,12 +801,9 @@ class LakeTable:
                     "schema_id": self.manifest["schema_id"],
                 }
             )
-        stat_cols = self._stat_cols()
-        if stat_cols and entries:
-            # footer-only metadata reads, executor-side, O(files written
-            # THIS commit) — the driver opens no footers (the commit path's
-            # serial term stays O(1)); never O(table)
-            collect_entry_stats(self.spark, self.root, entries, self.schema, stat_cols)
+        bucket_rows = collect_entry_stats(
+            self.root, entries, self.schema, self._stat_cols()
+        )
         return entries, bucket_rows
 
     def _write_delta_files(
@@ -829,7 +841,6 @@ class LakeTable:
         snap_dir = f"data/delta-{seq:08d}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.root, snap_dir)
         cur = self.schema
-        is_del = F.col(op_col) == delete_value
         # pre_partitioned: the caller's change-set already carries __bucket
         # and is exchange-partitioned AND sorted by it (cdc.apply's
         # bucket-aligned dedup) — the write below then needs NO repartition
@@ -840,14 +851,22 @@ class LakeTable:
             if pre_partitioned
             else changes.withColumn("__bucket", self.bucket_expr())
         )
+        # the per-bucket aggregates are SQL text over internal columns only
+        # (one Py4J call each, no caller value pasted into SQL): the delete
+        # flag and the order column are computed once, by the Column API
+        df = df.select(
+            "*",
+            (F.col(op_col) == delete_value).alias("__is_del"),
+            *([F.col(order_col).alias("__ord")] if order_col is not None else []),
+        )
         aggs = []
         for b in range(self.num_buckets):
-            inb = F.col("__bucket") == b
-            aggs.append(F.sum(F.when(inb & ~is_del, 1).otherwise(0)).alias(f"u{b}"))
-            aggs.append(F.sum(F.when(inb & is_del, 1).otherwise(0)).alias(f"d{b}"))
+            inb = f"__bucket = {b}"
+            aggs.append(F.expr(f"count_if({inb} AND NOT __is_del) AS u{b}"))
+            aggs.append(F.expr(f"count_if({inb} AND __is_del) AS d{b}"))
             if order_col is not None:
-                aggs.append(F.min(F.when(inb, F.col(order_col))).alias(f"lo{b}"))
-                aggs.append(F.max(F.when(inb, F.col(order_col))).alias(f"hi{b}"))
+                aggs.append(F.expr(f"min(CASE WHEN {inb} THEN __ord END) AS lo{b}"))
+                aggs.append(F.expr(f"max(CASE WHEN {inb} THEN __ord END) AS hi{b}"))
         for name, expr in (extra_obs or {}).items():
             aggs.append(expr.alias(f"x_{name}"))
         obs = Observation(f"rows-{snap_dir}")
@@ -860,7 +879,7 @@ class LakeTable:
         ]
         shaped = df.observe(obs, *aggs).select(
             *proj,
-            F.when(is_del, F.lit("d")).otherwise(F.lit("u")).alias("__op"),
+            F.when(F.col("__is_del"), F.lit("d")).otherwise(F.lit("u")).alias("__op"),
             F.col("__bucket"),
         )
         if not pre_partitioned:
@@ -1124,9 +1143,10 @@ class LakeTable:
         discovery aggregation is skipped and the write is this call's only
         Spark action (the file prune reads only the manifest).  Counted per
         call, a clean COW merge of a 2,000-row batch into a 4-bucket table
-        runs 11 Spark jobs without ``bucket_stats`` (8 with
+        runs 9 Spark jobs without ``bucket_stats`` (6 with
         ``count_deletes=False``): AQE splits the discovery aggregate, the
-        exact-delete count and the write into several jobs each.  Held by
+        exact-delete count and the write into several jobs each; the scan
+        and the commit's footer reads run none.  Held by
         ``tests/test_job_budget.py::test_cow_merge_job_budget``.
         """
         with self._write_lock:
@@ -1480,8 +1500,8 @@ class LakeTable:
         """Fold merge-on-read deltas back into base files (bucket-scoped).
 
         The MOR-resolved read of the delta-bearing buckets is rewritten as
-        plain base files (one shuffle on ``__bucket``, row counts observed on
-        the write), the buckets' deltas leave the manifest, and per-bucket
+        plain base files (one shuffle on ``__bucket``, row counts from the
+        new footers), the buckets' deltas leave the manifest, and per-bucket
         counts become exact again.  Equivalent to Iceberg's rewrite_data_files
         maintenance; run it on a schedule or when :meth:`delta_detail`'s
         bytes cross a threshold — ingest never blocks on it.
@@ -1803,7 +1823,7 @@ class LakeTable:
         files = self.manifest["files"]
         size = 0
         for f in files:
-            if "bytes" in f:  # recorded by the executor-side footer job
+            if "bytes" in f:  # recorded at commit from a driver inode stat
                 size += f["bytes"]
             else:  # legacy entry — driver stat fallback
                 p = os.path.join(self.root, f["path"])
@@ -1991,8 +2011,8 @@ class LakeTable:
         return out
 
     def row_count(self) -> int:
-        """Exact live row count.  Metadata-only (per-bucket counts observed
-        during writes) — except while merge-on-read deltas are live, when an
+        """Exact live row count.  Metadata-only (per-bucket counts recorded
+        at each commit) — except while merge-on-read deltas are live, when an
         exact count genuinely requires resolving them (a delta upsert may be
         an insert or an update; a tombstone may or may not hit a row), so
         this runs one count over the resolved read.  :meth:`compact` returns

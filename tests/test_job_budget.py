@@ -26,15 +26,19 @@ SCHEMA = [("k", "bigint"), ("g", "string"), ("v", "bigint")]
 MOR_MERGE_JOBS = 2
 
 # jobs a clean copy-on-write merge() of _changes into _table runs once the
-# MERGE file prune is the range tier alone (its 2nd and 3rd merges ran 14
-# while the per-key probe still ran, and 11 once its hysteresis had turned
-# it off)
-COW_MERGE_JOBS = 11
+# commit reads its new footers on the driver and the scan passes its schema
+# (11 with the executor footer job and an inferred reader schema; 14 while
+# the per-key probe still ran)
+COW_MERGE_JOBS = 9
 
 # jobs the third scd2_apply batch of test_scd2_apply_job_budget's stream
-# runs once the per-key probe is gone and the exact-delete count is skipped
-# on a change-set with no deletes (19 with both)
-SCD2_APPLY_JOBS = 13
+# runs with driver-side footers and explicit reader schemas (13 before; 19
+# with the per-key probe and an unconditional exact-delete count)
+SCD2_APPLY_JOBS = 10
+
+# jobs compact() runs after three MOR batches into _table (6 with the
+# executor footer job and inferred reader schemas)
+COMPACT_JOBS = 2
 
 # jobs one run_validation of _validation_pair ran once the schema checks
 # moved onto the driver (20 when they ran as Spark joins)
@@ -132,6 +136,52 @@ def test_scd2_apply_job_budget(spark, tmp_root):
         assert n <= SCD2_APPLY_JOBS, f"scd2_apply batch ran {n} jobs"
     finally:
         ev.unpersist()
+
+
+def test_read_runs_no_job(spark, tmp_root):
+    """read() passes each file group's writer schema from the manifest, so
+    building the frame runs no schema-inference job: base files under three
+    schema ids (after add_column, rename_column and widen_type) plus live
+    MOR deltas."""
+    t = _table(spark, tmp_root)
+    t.overwrite(_changes(spark, 0, 40).drop("op"))
+    t.add_column("w", "int")
+    t.append(_changes(spark, 40, 20).drop("op").withColumn("w", F.lit(1)))
+    t.rename_column("g", "grp")
+    t.append(
+        _changes(spark, 60, 20).drop("op").withColumnRenamed("g", "grp")
+        .withColumn("w", F.lit(2))
+    )
+    t.widen_type("w", "bigint")
+    t.merge(
+        _changes(spark, 70, 20).withColumnRenamed("g", "grp")
+        .withColumn("w", F.lit(3)),
+        batch_id=0, mode="mor", count_deletes=False,
+    )
+    assert len({f["schema_id"] for f in t.manifest["files"]}) == 3
+    assert t.manifest["deltas"]
+    df, n = _jobs(spark, t.read)
+    assert n == 0, f"read() ran {n} jobs"
+
+    def want(k):
+        w = None if k < 40 else 1 if k < 60 else 2 if k < 70 else 3
+        return (k, str(k % 7), k * 3, w)
+
+    live = [k for k in range(90) if k < 70 or k % 10 != 0]
+    assert sorted(tuple(r) for r in df.collect()) == [want(k) for k in live]
+
+
+def test_compact_job_budget(spark, tmp_root):
+    t = _table(spark, tmp_root)
+    for i in range(3):
+        t.merge(
+            _changes(spark, i * 500, 2000), batch_id=i, mode="mor",
+            count_deletes=False,
+        )
+    st, n = _jobs(spark, t.compact)
+    assert not st["skipped"] and st["remaining_delta_files"] == 0
+    assert n <= COMPACT_JOBS, f"compact() ran {n} jobs"
+    assert t.row_count() == t.read().count() == 2700
 
 
 def test_commit_staged_deltas_runs_no_job(spark, tmp_root):

@@ -178,40 +178,91 @@ def test_merge_large_batch_without_broadcast(spark, tmp_root):
     assert stats2["rows_upserted"] == 0
 
 
-def test_merge_does_zero_driver_footer_reads(spark, tmp_root):
-    # per-file stats must come from the executor-side footer job; the
-    # DRIVER process must never open a parquet footer during a commit.
-    import pyarrow.parquet as pq
+def _jobs_with_python_rdd(spark, gid):
+    """Ids of the jobs of group ``gid`` whose stages hold a PythonRDD."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    return [
+        jid
+        for jid in sc.statusTracker().getJobIdsForGroup(gid)
+        if any(
+            "PythonRDD" in dot(store.operationGraphForStage(sid))
+            for sid in sc.statusTracker().getJobInfo(jid).stageIds
+        )
+    ]
 
+
+def test_commit_reads_only_its_own_footers(spark, tmp_root):
+    """Per-file stats and row counts come from the footers of the files a
+    commit wrote, each opened once on the driver, never an older file's:
+    the commit's footer I/O is O(files written), never O(table), and the
+    commit runs no Python-worker job.  An unreadable footer fails the
+    commit before its manifest is linked."""
+    import pyarrow.parquet as pq
+    import pytest
+
+    from data_migration_validator_spark.session import local_frame
+
+    cols = "repo string, path string, commit string, lang string, content string"
     t = _mk(spark, tmp_root, num_buckets=4)
-    driver_calls = []
+    opened = []
     orig_cls = pq.ParquetFile
 
     class RecordingParquetFile(orig_cls):
-        def __init__(self, *a, **kw):
-            driver_calls.append(a)
-            super().__init__(*a, **kw)
+        def __init__(self, source, *a, **kw):
+            opened.append(source)
+            super().__init__(source, *a, **kw)
+
+    def live():
+        return {os.path.join(t.root, f["path"]) for f in t.manifest["files"]}
 
     pq.ParquetFile = RecordingParquetFile
     try:
         t.overwrite(
-            spark.createDataFrame(
-                [(f"r{i}", "p", "c", "py", "v") for i in range(100)],
-                "repo string, path string, commit string, lang string, content string",
+            local_frame(
+                spark, [(f"r{i}", "p", "c", "py", "v") for i in range(100)], cols
             )
         )
-        changes = spark.createDataFrame(
-            [("r1", "p", "c2", "py", "v2", "update")],
-            "repo string, path string, commit string, lang string, content string, op string",
+        first = live()
+        assert sorted(opened) == sorted(first)
+        opened.clear()
+        changes = local_frame(
+            spark, [("r1", "p", "c2", "py", "v2", "update")], f"{cols}, op string"
         )
-        t.merge(changes, batch_id=9)
+        sc = spark.sparkContext
+        sc.setJobGroup("cow-merge-footers", "cow merge")
+        try:
+            t.merge(changes, batch_id=9)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        written = live() - first
+        assert written and sorted(opened) == sorted(written)
+        assert not set(opened) & first
     finally:
         pq.ParquetFile = orig_cls
-    assert driver_calls == []  # executor processes never touch this list
+    assert _jobs_with_python_rdd(spark, "cow-merge-footers") == []
+    assert sc.statusTracker().getJobIdsForGroup("cow-merge-footers")
     assert t.row_count() == 100
-    # manifest carries byte sizes from the same job — detail() is pure metadata
+    # manifest carries byte sizes from the write — detail() is pure metadata
     assert all("bytes" in f for f in t.manifest["files"])
     assert t.detail()["size_in_bytes"] > 0
+
+    class UnreadableParquetFile(orig_cls):
+        def __init__(self, *a, **kw):
+            raise OSError("unreadable footer")
+
+    seq = t.manifest["seq"]
+    pq.ParquetFile = UnreadableParquetFile
+    try:
+        with pytest.raises(OSError, match="unreadable footer"):
+            t.merge(changes.withColumn("content", F.lit("v3")), batch_id=10)
+    finally:
+        pq.ParquetFile = orig_cls
+    t2 = LakeTable.load(spark, t.root)
+    assert t2.manifest["seq"] == seq and not t2.has_batch(10)
+    assert t2.read().filter("repo = 'r1'").select("content").collect()[0][0] == "v2"
 
 
 def test_read_bucket_pruning_filters_files(spark, tmp_root):
@@ -275,3 +326,43 @@ def test_merge_broadcast_decision_matrix_and_plan(spark, tmp_root):
         assert "BroadcastHashJoin" not in plan_u  # shuffle join path
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_char_varchar_columns_roundtrip(spark, tmp_root):
+    """char/varchar columns read back through the manifest's writer schema
+    (Spark takes them as string in a reader schema) on every write path:
+    overwrite, copy-on-write and merge-on-read merge, compaction."""
+    t = LakeTable.create(
+        spark, os.path.join(tmp_root, "cv"),
+        [("k", "bigint"), ("name", "varchar(16)"), ("code", "char(4)")],
+        key_cols=["k"], num_buckets=4,
+    )
+    cols = "k bigint, name string, code string"
+    t.overwrite(
+        spark.createDataFrame([(i, f"n{i}", f"c{i:03d}") for i in range(20)], cols)
+    )
+    t.merge(
+        spark.createDataFrame(
+            [(1, "cow", "COW1", "update"), (2, None, None, "delete"),
+             (30, "new", "NEW0", "insert")],
+            f"{cols}, op string",
+        ),
+        batch_id=0,
+    )
+    t.merge(
+        spark.createDataFrame(
+            [(3, "mor", "MOR3", "update"), (4, None, None, "delete"),
+             (31, "late", "LAT1", "insert")],
+            f"{cols}, op string",
+        ),
+        batch_id=1, mode="mor",
+    )
+    want = {i: (i, f"n{i}", f"c{i:03d}") for i in range(20)}
+    want.update({1: (1, "cow", "COW1"), 3: (3, "mor", "MOR3"),
+                 30: (30, "new", "NEW0"), 31: (31, "late", "LAT1")})
+    del want[2], want[4]
+    expected = sorted(want.values())
+    assert _rows(t.read()) == expected
+    assert not t.compact()["skipped"] and not t.manifest["deltas"]
+    assert _rows(t.read()) == expected
+    assert _rows(LakeTable.load(spark, t.root).read()) == expected

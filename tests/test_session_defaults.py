@@ -21,10 +21,10 @@ def test_default_cores_follows_affinity_unless_pinned(monkeypatch):
 
 
 def test_cow_batch_with_package_importable_on_driver_only(tmp_path):
-    """The base-file footer-stats job runs in Python workers; they must
-    not need this package on their import path.  The driver gets it via
-    sys.path only, from a cwd outside the checkout, with PYTHONPATH
-    unset."""
+    """A copy-on-write batch runs with this package importable on the
+    driver only: no commit step ships its code to a Python worker.  The
+    driver gets it via sys.path only, from a cwd outside the checkout,
+    with PYTHONPATH unset."""
     script = textwrap.dedent(
         f"""
         import sys
